@@ -2484,7 +2484,7 @@ def event_transition_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = ev.select(
         "event_type", F.lead("event_type").over(w).alias("nxt")
     ).filter(F.col("nxt").isNotNull())
-    from pyspark import StorageLevel
+    from strom_spark.cache import pin as _cache_pin
 
     # the transition-count table is |types|^2-bounded and consumed by
     # the totals agg AND the final join — pin it (small-intermediate
@@ -2494,7 +2494,7 @@ def event_transition_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("cur_type"), F.col("nxt").alias("next_type")
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(_cache_pin)
     )
     t = c.groupBy("cur_type").agg(F.sum("n").alias("total"))
     return c.join(t, "cur_type").select(
@@ -2537,7 +2537,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst fuses the distinct-day projection into both aggregations.
     Retention is bigint/bigint IEEE division — hash-exact cross-
     engine.  Beyond-reference: product-analytics surface."""
-    from pyspark import StorageLevel
+    from strom_spark.cache import pin as _cache_pin
 
     ev = load_table(spark, sf_dir, "events")
     # (user, active-day) distinct is BOUNDED (users x days, not
@@ -2547,13 +2547,13 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     act = (
         ev.select("user_id", F.to_date("ts").alias("d"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(_cache_pin)
     )
     c = act.groupBy("user_id").agg(F.min("d").alias("cohort"))
     r = (
         act.join(c, "user_id")
         .select("user_id", "cohort", F.datediff("d", "cohort").alias("off"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(_cache_pin)
     )
     sz = (
         r.filter(F.col("off") == 0)
@@ -5134,11 +5134,9 @@ def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join: pin the narrow (id, fp) frame once instead of running
     # the tokenize+3-gram-hash+window-min HOF chain per consumer (r14,
     # the shared-lineage rule; plan showed the documents scan 4x)
-    from pyspark import StorageLevel
+    from strom_spark.cache import pin as _cache_pin
 
-    from strom_spark.cache import track as _cache_track
-
-    fps = fps.persist(StorageLevel.MEMORY_AND_DISK).transform(_cache_track)
+    fps = _cache_pin(fps)
     freq_ok = fps.groupBy("fp").agg(F.count("*").alias("__n")).filter(F.col("__n") <= 50).select("fp")
     posting = fps.join(freq_ok, "fp")
     a, b = posting.alias("a"), posting.alias("b")
@@ -8281,11 +8279,9 @@ def curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side — pin the decontaminated survivor set once instead of
     # running the dedup+decontaminate subtree per consumer (r14, the
     # shared-lineage rule; see _curation_v3_split)
-    from pyspark import StorageLevel
+    from strom_spark.cache import pin as _cache_pin
 
-    from strom_spark.cache import track as _cache_track
-
-    clean = clean.persist(StorageLevel.MEMORY_AND_DISK).transform(_cache_track)
+    clean = _cache_pin(clean)
     reps = TXT.repetition_stats(clean, "doc_id", "text", k=3)
     counts = TXT.pii_counts("text")
     audited = (
@@ -8493,11 +8489,9 @@ def _curation_v3_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer.  Persist the survivor set once (r14; MEMORY_AND_DISK,
     # LRU-evictable, released via strom_spark.release_caches) — the
     # same shared-lineage rule every auto-mode operator applies.
-    from pyspark import StorageLevel
+    from strom_spark.cache import pin as _cache_pin
 
-    from strom_spark.cache import track as _cache_track
-
-    gated = gated.persist(StorageLevel.MEMORY_AND_DISK).transform(_cache_track)
+    gated = _cache_pin(gated)
     reps = TXT.repetition_stats(gated, "doc_id", "text", k=3)
     counts = TXT.pii_counts("text")
     audited = (

@@ -32,6 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from strom_spark import get_spark, release_caches
+from strom_spark.session import local_cpus
 
 #: headline subset: scan-agg, join-heavy, window, routing, stateful,
 #: dedup family, ANN, CEP — one per operator family in SURVEY §2.3
@@ -257,6 +258,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
     n_warm = int(os.environ.get("SPARK_GRAFT_BENCH_WARM", "2"))
+    cpus = local_cpus()  # validated before the first query runs
     spark = get_spark("strom_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -334,11 +336,11 @@ def main() -> None:
         # operator-internal persists (tracked in strom_spark.cache) used
         # to ACCUMULATE across the whole 96-query session — cache.py's
         # own contract says the driver releases "between sweep queries"
-        # (check_correctness and tools/r14_measure do; bench.py did
-        # not).  Two distortions, both measured in the r14 A/B: late
-        # queries inherit eviction churn from dozens of stale cached
-        # frames (minhash_recall_floor printed 8.99 s warm-min late in
-        # an aged session vs 3.1-4.0 s isolated), and a query whose
+        # (check_correctness does; bench.py did not).  Two
+        # distortions, both measured in the r14 A/B: late queries
+        # inherit eviction churn from dozens of stale cached frames
+        # (minhash_recall_floor printed 8.99 s warm-min late in an
+        # aged session vs 3.1-4.0 s isolated), and a query whose
         # lineage matches an EARLIER query's persisted frame silently
         # reuses that cache, flattering its number.  Releasing AFTER
         # each query's runs keeps the intra-query warm-cache behavior
@@ -416,7 +418,6 @@ def main() -> None:
     # different core counts never overwrite each other; the legacy
     # un-suffixed name stays for existing tooling (latest run wins
     # there, as before).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     detail_payload = {"value": total, "queries": timings, "sf": sf,
                       "cpus": cpus,
                       **detail, **({"errors": errors} if errors else {})}

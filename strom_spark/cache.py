@@ -11,25 +11,32 @@ the recompute straight back in.
 Spark's LRU eviction keeps this safe, but a long-lived session running
 many auto operators accumulates disk-backed blocks until memory
 pressure evicts them.  The fix is a session-level registry: operators
-``track()`` every persist, and the driver program calls
-:func:`release_caches` at its natural pipeline-end points (after a
-sink materialized, between sweep queries) to drop everything in one
-call without each operator guessing when its cache is dead.
+persist through :func:`pin`, which registers the frame, and the driver
+program calls :func:`release_caches` at its natural pipeline-end
+points (after a sink materialized, between sweep queries) to drop
+everything in one call without each operator guessing when its cache
+is dead.
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
+
 _TRACKED: list = []
 
 
-def track(df):
-    """Register a persisted DataFrame for later bulk release.  Returns
-    ``df`` so call sites stay one-liners (``.persist(...)
-    .transform(track)``).  Holds a STRONG reference on purpose: the
-    JVM-side cache entry outlives the thin Python wrapper, so a weak
-    reference would die with the operator's local variable and orphan
-    the very blocks this registry exists to free.  The wrapper itself
-    is a few hundred bytes — negligible next to the cached data."""
+def pin(df):
+    """Persist ``df`` at MEMORY_AND_DISK and register it for
+    :func:`release_caches`.  Returns the persisted frame, so call sites
+    stay one-liners (``df = pin(df)`` or ``.transform(pin)``) — the one
+    persist primitive every operator uses.
+
+    The registry holds a STRONG reference on purpose: the JVM-side
+    cache entry outlives the thin Python wrapper, so a weak reference
+    would die with the operator's local variable and orphan the very
+    blocks this registry exists to free.  The wrapper itself is a few
+    hundred bytes — negligible next to the cached data."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _TRACKED.append(df)
     return df
 

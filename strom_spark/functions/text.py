@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..cache import pin as _pin
+
 #: BPE-ish pre-tokenizer: letter runs, digit runs, single punctuation
 BPE_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -574,7 +576,6 @@ def gopher_repetition_stats(
     slim (__id, text) projection is persisted and ITS count doubles
     as cache materialization for the three branches that consume it
     — never a raw-input pass whose work nothing reuses."""
-    from pyspark import StorageLevel
     from pyspark.sql import DataFrame  # noqa: F401 — signature doc
 
     slim = df.select(
@@ -590,9 +591,9 @@ def gopher_repetition_stats(
     # paragraph family, tokenizer), so the pass is work the pipeline
     # needed anyway (the PHashNearDupPairs pattern).
     if n_rows is None:
-        slim = slim.persist(StorageLevel.MEMORY_AND_DISK)
+        slim = _pin(slim)
         n_rows = slim.count()
-    pin = n_rows >= persist_min_rows
+    pin_subtrees = n_rows >= persist_min_rows
     ids = slim.select("__id").distinct()
 
     def _family(sep: str, prefix: str) -> DataFrame:
@@ -620,8 +621,8 @@ def gopher_repetition_stats(
         "__id",
         F.filter(tokens("__t"), lambda x: x != F.lit("")).alias("__w"),
     )
-    if pin:
-        toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
+    if pin_subtrees:
+        toks = _pin(toks)
     tchars = toks.select(
         "__id",
         F.aggregate(
@@ -656,8 +657,8 @@ def gopher_repetition_stats(
     gcnt = grams.groupBy("__id", "__nn", "__g").agg(
         F.count(F.lit(1)).alias("__c")
     )
-    if pin:
-        gcnt = gcnt.persist(StorageLevel.MEMORY_AND_DISK)
+    if pin_subtrees:
+        gcnt = _pin(gcnt)
 
     # top family (n = 2..4): min(struct(-c, g)) == ORDER BY c DESC, g
     top = (

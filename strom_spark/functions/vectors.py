@@ -15,116 +15,31 @@ def _c(col: "Column | str") -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def dot(a: "Column | str", b: "Column | str", dim: int | None = None) -> Column:
+def dot(a: "Column | str", b: "Column | str") -> Column:
     """Sequential left-fold dot product — deterministic summation order
-    (stable across runs/engines for oracle comparison).
+    (stable across runs/engines for oracle comparison).  ``zip_with``
+    null-pads ragged pairs, so a length mismatch yields null.
 
-    ``dim=None`` is the generic higher-order-function form.  HOF lambdas
-    (``zip_with``/``aggregate``) do not participate in whole-stage
-    codegen — Catalyst evaluates them interpreted, per element, plus an
-    intermediate array allocation per pair — which dominates per-pair
-    cost in the similarity/dedup operators (r14 measurement: the 64-dim
-    corpus×query scan spends most of its stage time here).
+    HOF lambdas run interpreted, outside whole-stage codegen; the hot
+    paths avoid that cost either by unrolling against a literal
+    (:func:`dot_literal`) or by vectorizing a broadcast tile in Arrow
+    (``CosineTopK._scan_arrow``)."""
+    return F.aggregate(
+        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
-    With ``dim`` (probed once from a materialized frame), the same
-    arithmetic is emitted as an UNROLLED codegen'd chain
-    ``((0.0 + a[0]·b[0]) + a[1]·b[1]) + …`` — bit-identical to the fold:
-    identical left association, identical per-element rounding, and
-    Catalyst's ReorderAssociativeOperator only fires on integral types
-    so the double chain is never re-associated.  Rows whose arrays are
-    not exactly ``dim`` long fall back to the HOF form via a size guard
-    (``zip_with`` null-pads ragged pairs; the unrolled form would
-    silently truncate a longer array, so the guard is what keeps the
-    two forms exactly equal on every input)."""
-    ca, cb = _c(a), _c(b)
-    if dim is None:
-        return F.aggregate(
-            F.zip_with(ca, cb, lambda x, y: x.cast("double") * y.cast("double")),
+
+def norm(a: "Column | str") -> Column:
+    """Sequential left-fold L2 norm (same summation order as :func:`dot`)."""
+    return F.sqrt(
+        F.aggregate(
+            F.transform(_c(a), lambda x: x.cast("double") * x.cast("double")),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + ca[i].cast("double") * cb[i].cast("double")
-    return F.when(
-        (F.size(ca) == dim) & (F.size(cb) == dim), acc
-    ).otherwise(dot(ca, cb))
-
-
-def norm(a: "Column | str", dim: int | None = None) -> Column:
-    """Sequential left-fold L2 norm; see :func:`dot` for the ``dim``
-    unrolled-codegen fast path (same bit-exactness argument)."""
-    ca = _c(a)
-    if dim is None:
-        return F.sqrt(
-            F.aggregate(
-                F.transform(ca, lambda x: x.cast("double") * x.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        x = ca[i].cast("double")
-        acc = acc + x * x
-    return F.sqrt(F.when(F.size(ca) == dim, acc).otherwise(
-        F.aggregate(
-            F.transform(ca, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc2, x: acc2 + x,
-        )
-    ))
-
-
-def maybe_dim(d: int | None) -> int | None:
-    """Gate for the unrolled fast path — OFF unless
-    ``STROM_SPARK_UNROLL_DIM=1`` is set.  Every operator passes its
-    known dim through here.
-
-    Why opt-in (r14 interleaved A/B at sf0.1, one session, box drift
-    controlled): the unrolled chain is ~2× faster PER PAIR than the
-    interpreted HOF fold (400k-pair microbench 2.2 s → 1.0 s warm),
-    but each stage that contains it pays a fixed ~0.5–1 s of codegen
-    compilation (Janino + AQE re-codegen per query stage) that the HOF
-    form does not.  The crossover sits around ~0.5M candidate pairs at
-    dim 64 — far above what any bench-SF query generates (measured:
-    knn_topk 0.66 s HOF vs 1.48 s unrolled at 100k pairs; ann_recall
-    3.0 vs 6.3 with three IVF invocations' worth of compiles) and far
-    below one task's share of any 100 TB pair scan.  A deployment
-    whose pair volumes are production-sized sets the env to flip every
-    similarity/dedup pair kernel to the codegen chain; the default
-    keeps small-corpus latency (and the driver's bench) on the form
-    that wins there.  Results are bit-identical either way (the
-    size-guarded fallback in :func:`dot`/:func:`norm`)."""
-    import os
-
-    if os.environ.get("STROM_SPARK_UNROLL_DIM", "") != "1":
-        return None
-    if d is not None and not 0 < int(d) <= 512:
-        return None
-    return d
-
-
-def probe_dim(df, vec_col: "Column | str") -> int | None:
-    """Array length of ``vec_col`` in one row of ``df`` (None when the
-    frame is empty or the probe fails).  ONE tiny job — call it on a
-    frame that is already materialized (localCheckpoint/persist) or is
-    a plain scan, so the probe never re-runs expensive lineage.  The
-    result only selects the fast path; a wrong/unrepresentative value
-    never changes results (ragged rows take the guarded HOF branch in
-    :func:`dot`/:func:`norm`)."""
-    if maybe_dim(1) is None:
-        return None  # kill-switch: skip the probe job entirely
-    try:
-        row = df.select(F.size(_c(vec_col)).alias("__d")).limit(1).collect()
-        if not row or row[0]["__d"] is None or row[0]["__d"] <= 0:
-            return None
-        d = int(row[0]["__d"])
-        # cap: a pathological 10k-dim unroll would blow expression-tree
-        # and codegen budgets; HOF form handles it fine
-        return d if d <= 512 else None
-    except Exception:
-        return None
+    )
 
 
 def const_double_array(values) -> Column:
@@ -152,8 +67,8 @@ def const_long_array(values) -> Column:
 
 def dot_literal(a: "Column | str", values) -> Column:
     """Left-fold dot of a vector column against a PYTHON-side constant
-    vector (pivot/centroid), unrolled into a codegen'd chain — the
-    ``dim`` is the literal's own length, so no probe job is needed.
+    vector (pivot/centroid), unrolled into a codegen'd chain whose
+    length is the literal's own length.
     Bit-identical to ``dot(a, F.array(*map(F.lit, values)))``: same
     left association, same per-element double products (a float literal
     element and ``F.lit(float)`` are the same double), with the ragged
@@ -190,22 +105,20 @@ def cosine(a: "Column | str", b: "Column | str") -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_normalize(a: "Column | str", dim: int | None = None) -> Column:
+def l2_normalize(a: "Column | str") -> Column:
     """Pre-normalize once so downstream similarity is a plain dot
-    product — at scale, normalize at ingest, not per pair.  ``dim``
-    unrolls the norm (see :func:`dot`).
+    product — at scale, normalize at ingest, not per pair.
 
     NOTE the HOF re-evaluation trap (text.shingles_of_tokens): the
     ``transform`` lambda body — including the whole norm subtree — is
     re-evaluated PER ELEMENT, so this single-expression form is
     O(dim²) per row.  Hot paths should use :func:`l2_normalize_select`
     which projects the norm once and divides by the bound column."""
-    n = norm(a, dim=dim)
+    n = norm(a)
     return F.transform(_c(a), lambda x: x.cast("double") / n)
 
 
-def l2_normalize_select(df, id_col: str, vec_col, out_col: str,
-                        dim: int | None = None):
+def l2_normalize_select(df, id_col: str, vec_col, out_col: str):
     """``df.select(id_col, l2_normalize(vec_col).alias(out_col))`` with
     the norm hoisted into its own projection so it is computed ONCE per
     row instead of once per element (the HOF lambda re-evaluates its
@@ -213,7 +126,7 @@ def l2_normalize_select(df, id_col: str, vec_col, out_col: str,
     the fold itself is interpreted).  Bit-identical output: the same
     per-element ``x.cast(double) / norm`` division in the same order."""
     cv = _c(vec_col)
-    n = norm(cv, dim=dim).alias("__l2n")
+    n = norm(cv).alias("__l2n")
     return df.select(F.col(id_col), cv.alias("__l2v"), n).select(
         F.col(id_col),
         F.transform(F.col("__l2v"),
@@ -225,15 +138,6 @@ def l2_normalize_select(df, id_col: str, vec_col, out_col: str,
 # Arrow-native pair kernels (r14, guide §4.2): vectorize the per-pair
 # fold across a batch instead of evaluating it interpreted per element.
 # ---------------------------------------------------------------------------
-
-def arrow_pairs_enabled() -> bool:
-    """Gate for the Arrow pair kernels — ON by default; set
-    ``STROM_SPARK_ARROW_PAIRS=0`` to restore the pure-JVM expression
-    forms (comparison runs / environments without numpy workers)."""
-    import os
-
-    return os.environ.get("STROM_SPARK_ARROW_PAIRS", "1") != "0"
-
 
 def arrow_tile_max_bytes() -> int:
     """Driver-memory cap for an Arrow pair-kernel query tile, in BYTES

@@ -38,8 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import pin as _pin
 from ..component import Component
-from ..cache import track as _track
 from ..flow import Flow
 from ..functions import text as TXT
 from ..functions import vectors as V
@@ -293,17 +293,24 @@ class NgramJaccardPairs(Component):
 
 
 class MinHashLSHPairs(Component):
-    """MinHash + banded LSH near-dup pairs, verified by exact Jaccard.
+    """MinHash + banded LSH near-dup pairs, verified by Jaccard.
 
-    Signature: for seed i in 0..num_hashes-1, sig_i = min over shingles
-    of md5(i || '|' || shingle) — min over hex strings (lexicographic =
-    uniform order on the hash space).  Bands of ``rows_per_band``
-    concatenated signatures become bucket keys; only same-bucket pairs
-    are candidates (sub-quadratic).  Candidates then verified with the
-    exact Jaccard join restricted to candidate ids, so the output has
-    no false positives; recall is the standard LSH S-curve
-    (32 hashes / 16 bands × 2 rows -> P(catch | j=0.8) ≈ 1-(1-0.64)^16
-    ≈ 0.9999).
+    Each shingle is hashed once, h = xxhash64(shingle) mod (2^31 - 1);
+    for seed i in 0..num_hashes-1, sig_i = min over shingles of
+    (a_i·h + b_i) mod (2^31 - 1).  Bands of ``rows_per_band``
+    signatures become bucket keys; only same-bucket pairs are
+    candidates (sub-quadratic).  Candidates are then verified with a
+    Jaccard join restricted to candidate ids, so the output has no
+    false positives at the hashed-set level; recall is the standard
+    LSH S-curve (32 hashes / 16 bands × 2 rows -> P(catch | j=0.8) ≈
+    1-(1-0.64)^16 ≈ 0.9999).
+
+    **Hashed-set Jaccard.**  The verify Jaccard is computed over the
+    sets of xxhash64-hashed shingles, not over the shingle strings.
+    A 64-bit collision between two distinct shingles shrinks a set
+    (expected collisions ≈ n²/2^65 for n distinct shingles), so a pair
+    whose Jaccard sits exactly at ``threshold`` may land on either
+    side of it: output at the boundary is probabilistic.
 
     **Auto banding (r12 — the CosineLSHJoin auto-sizing discipline,
     similarity.py).**  ``rows_per_band=None`` resolves (rows, bands)
@@ -407,11 +414,6 @@ class MinHashLSHPairs(Component):
         )
         self.target_partition_docs = int(target_partition_docs)
         self.label = label
-
-    #: persist the (id, shingle-hash set) frame on the PINNED path too
-    #: (r15; A/B hook for tools/r15_minhash_ab.py --pin) — see the
-    #: history note in transform()
-    _PERSIST_PINNED = True
 
     def _resolve(self) -> tuple[int, int]:
         """(num_hashes, rows_per_band) with the auto (None) defaults
@@ -534,7 +536,6 @@ class MinHashLSHPairs(Component):
         )
 
     def transform(self, flow: Flow) -> Flow:
-        from pyspark import StorageLevel
         from pyspark.sql import Window
 
         df = flow[self.input]
@@ -554,22 +555,23 @@ class MinHashLSHPairs(Component):
             # instead of a second exchange.
             df = _spread(df)
         doc_sh = self._doc_shingles(df)
-        # shared three ways (signature postings + both verify sides):
-        # persist so one materialization feeds all consumers instead of
-        # running tokenization 3x / a composed upstream 4x; tracked for
-        # strom_spark.release_caches() (LRU-evictable until then —
-        # CosineLSHJoin discipline).
-        # History: r14 tried extending the persist to the PINNED path
-        # and REVERTED (pinned dedup_minhash_clusters 2.6 s → 3.7 s at
-        # sf0.1 — the lazy cache WRITE of array<string> shingles, the
-        # widest frame in the plan, landed on the first consumer's
-        # critical path).  r15's int64 shingle sets shrink that frame
-        # 3-4×, which flips the trade: re-measured via the pinned-arm
-        # A/B (plans/r15/minhash_pin_ab.jsonl, _PERSIST_PINNED is the
-        # A/B hook), the persist now wins on the pinned path too.
-        if auto or self._PERSIST_PINNED:
-            doc_sh = doc_sh.persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
         if auto:
+            # shared three ways (signature postings + both verify
+            # sides) AND counted for sizing: persist so the count
+            # materializes the cache every consumer then reads, instead
+            # of running tokenization 3x / a composed upstream 4x
+            # (CosineLSHJoin discipline).
+            # History: the PINNED path does not persist — the lazy
+            # cache WRITE of the shingle-set frame, the widest in the
+            # plan, lands on the first consumer's critical path.  r14
+            # measured it with array<string> shingles
+            # (dedup_minhash_clusters 2.6 s → 3.7 s at sf0.1), and
+            # again with r15's int64 shingle sets in
+            # plans/r15/minhash_pin_ab.jsonl: warm-min without the
+            # persist 2.943 s vs 3.462 s with it on
+            # dedup_minhash_clusters, 2.313 s vs 2.471 s on
+            # dedup_minhash_lsh.
+            doc_sh = _pin(doc_sh)
             n_docs = doc_sh.count()
             n_part = min(
                 2048, max(n_part, -(-n_docs // self.target_partition_docs))
@@ -937,8 +939,6 @@ class SimHashPairs(Component):
         self.label = label
 
     def transform(self, flow: Flow) -> Flow:
-        from pyspark import StorageLevel
-
         df = flow[self.input]
         bits = self.bits
         # the (id, sig) frame feeds BOTH sides of the block self-join;
@@ -948,8 +948,7 @@ class SimHashPairs(Component):
         # longs per doc, the cheapest cache in the family.
         sig = (
             _simhash_sig_int(df, self.id_col, self.text_col, bits)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-            .transform(_track)
+            .transform(_pin)
         )
         n_blocks = self.max_distance + 1
         width = bits // n_blocks
@@ -1061,8 +1060,6 @@ class SimHashDedup(Component):
             b = F.shiftrightunsigned(F.col("sig"), shift).bitwiseAND(F.lit((1 << length) - 1))
             return F.shiftleft(b, 4) + F.lit(i)
 
-        from pyspark import StorageLevel
-
         edges = sig.select(
             "id", F.explode(F.array(*[block_key(i) for i in range(n_blocks)])).alias("bk")
         )
@@ -1086,12 +1083,8 @@ class SimHashDedup(Component):
         # per copy instead.
         edges = edges.localCheckpoint(eager=True)
         if edges.count() >= self.partition_persist_min_rows:
-            edges_by_id = _track(
-                edges.repartition("id").persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            edges_by_bk = _track(
-                edges.repartition("bk").persist(StorageLevel.MEMORY_AND_DISK)
-            )
+            edges_by_id = _pin(edges.repartition("id"))
+            edges_by_bk = _pin(edges.repartition("bk"))
         else:
             edges_by_id = edges_by_bk = edges
         labels = (
@@ -1259,21 +1252,16 @@ class EmbeddingNearDupPairs(Component):
         return reduce(lambda a, b: a.unionAll(b), parts)
 
     def _join(self, df: DataFrame) -> DataFrame:
-        # one ~free probe job selects the unrolled codegen fast path
-        # for the quadratic pair dot (and hoists the normalize's norm
-        # out of the per-element lambda); ragged rows fall back to the
-        # HOF form per the vectors.dot size guard — bit-identical
-        dim = V.probe_dim(df, self.vec_col)
         normed = V.l2_normalize_select(
             df.select(F.col(self.id_col).alias("id"),
                       F.col(self.vec_col).alias("__rv")),
-            "id", "__rv", "v", dim=dim,
+            "id", "__rv", "v",
         )
         a, b = normed.alias("a"), normed.alias("b")
         return (
             a.join(b, F.col("a.id") < F.col("b.id"))
             .withColumn(
-                "cosine", F.round(V.dot(F.col("a.v"), F.col("b.v"), dim=dim), 6)
+                "cosine", F.round(V.dot(F.col("a.v"), F.col("b.v")), 6)
             )
             .filter(F.col("cosine") >= self.threshold)
             .select(F.col("a.id").alias("d1"), F.col("b.id").alias("d2"), "cosine")
@@ -1744,8 +1732,6 @@ class SubstringDedup(Component):
         # curation pipeline twice (45 exchanges → 28 with the pin).
         # MEMORY_AND_DISK: same materialization cost class as one
         # shuffle of the token arrays; Spark LRU evicts.
-        from pyspark import StorageLevel
-
         toks = (
             df.filter(F.col(self.text_col).isNotNull())
             .select(
@@ -1754,7 +1740,7 @@ class SubstringDedup(Component):
                     TXT.tokens(self.text_col), lambda x: x != F.lit("")
                 ).alias("__w"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+            .transform(_pin)
         )
         n = F.size("__w")
         win_arr = F.when(
@@ -2175,8 +2161,6 @@ class SemDeDup(Component):
         count; the input is persisted first so the count materializes
         the cache for the assignment scan instead of re-running a
         composed upstream (CosineLSHJoin discipline)."""
-        from pyspark import StorageLevel
-
         if self.n_clusters is not None:
             return int(self.n_clusters), slim
         # scan rebalance before persisting: a single-row-group corpus
@@ -2184,7 +2168,7 @@ class SemDeDup(Component):
         # the assignment GEMM and the persist single-threaded (see
         # MinHashLSHPairs.transform).  spread() is row-group aware and
         # a no-op when the flow already shuffled upstream.
-        slim = _spread(slim).persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+        slim = _pin(_spread(slim))
         n = slim.count()
         cap = max(1, self.sample_size // 4)
         k = min(cap, max(1, -(-n // self.target_cluster_rows)))
@@ -2200,17 +2184,13 @@ class SemDeDup(Component):
         rows = slim.orderBy("id").limit(k).collect()
         if not rows:
             raise ValueError("SemDeDup: input has no vectors")
-        # dim from the collected pivots (no probe job); hoisted-norm
-        # normalize — the one-expression l2_normalize re-evaluates the
-        # norm fold per ELEMENT, O(dim²) interpreted per row.  The
-        # pivot dots stay HOF folds: an unrolled chain embeds the pivot
-        # floats as literals, so every k-pivot set compiles fresh
-        # k×dim-term Janino methods (measured 1.7 s → 6.4 s at sf0.1,
-        # the LloydKMeans lesson).
-        dim = V.maybe_dim(
-            len(rows[0]["v"]) if rows[0]["v"] is not None else None
-        )
-        normed = V.l2_normalize_select(slim, "id", "v", "nv", dim=dim)
+        # hoisted-norm normalize — the one-expression l2_normalize
+        # re-evaluates the norm fold per ELEMENT, O(dim²) interpreted
+        # per row.  The pivot dots stay HOF folds: an unrolled chain
+        # embeds the pivot floats as literals, so every k-pivot set
+        # compiles fresh k×dim-term Janino methods (measured 1.7 s →
+        # 6.4 s at sf0.1, the LloydKMeans lesson).
+        normed = V.l2_normalize_select(slim, "id", "v", "nv")
         cands = []
         for r in rows:
             p = np.asarray(r["v"], dtype="float64")

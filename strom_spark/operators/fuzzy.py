@@ -55,6 +55,7 @@ from typing import Sequence
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..cache import pin as _pin
 from ..component import Component, require_batch
 from ..flow import Flow
 
@@ -164,10 +165,6 @@ class EditDistanceJoin(Component):
         # the cached partitioning satisfies the join on each side
         # instead of re-running the gram/frequency/rank subtree twice
         # (r14, the shared-lineage rule)
-        from pyspark import StorageLevel
-
-        from ..cache import track as _track
-
         prefix = (
             grams.join(freq, "__g")
             .withColumn("__rk", F.row_number().over(w))
@@ -176,8 +173,7 @@ class EditDistanceJoin(Component):
             .unionByName(sent)
             .join(base.select("__id", "__s"), "__id")
             .repartition(n_part, "__g")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-            .transform(_track)
+            .transform(_pin)
         )
         a, b = prefix.alias("a"), prefix.alias("b")
         out = (
@@ -231,17 +227,12 @@ class EditDistanceJoin(Component):
         # join's own and neither side re-shuffles) instead of paying
         # scan + variant explosion + exchange per side (r14, the
         # shared-lineage rule)
-        from pyspark import StorageLevel
-
-        from ..cache import track as _track
-
         exploded = (
             base.select(
                 "__id", "__len", "__s", F.explode(F.expr(variants)).alias("__v")
             )
             .repartition(n_part, "__v")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-            .transform(_track)
+            .transform(_pin)
         )
         a, b = exploded.alias("a"), exploded.alias("b")
         out = (

@@ -35,8 +35,8 @@ from typing import Sequence
 
 from pyspark.sql import functions as F
 
+from ..cache import pin as _pin
 from ..component import Component
-from ..cache import track as _track
 from ..flow import Flow
 from ..planprobe import probe_loop_plan
 
@@ -80,7 +80,6 @@ class ConnectedComponents(Component):
                     f"detector; column {c!r} is {dtypes.get(c)} — hash or "
                     "dense-rank string ids to longs first"
                 )
-        from pyspark import StorageLevel
 
         # the symmetric edge table is STATIC: persist it PARTITIONED
         # ON THE JOIN KEY (b) instead of localCheckpoint — a
@@ -95,7 +94,7 @@ class ConnectedComponents(Component):
             df.select(F.col(self.dst).alias("a"), F.col(self.src).alias("b"))
         )
         probe_loop_plan("ConnectedComponents/setup", sym)
-        sym = sym.repartition("b").persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+        sym = sym.repartition("b").transform(_pin)
         labels = sym.select("a").distinct().select("a", F.col("a").alias("lab"))
         # r15 (guide §2.3, verdict #5): FRONTIER-SHRINKING propagation.
         # The neighbor-min join only needs labels that CHANGED last
@@ -253,8 +252,6 @@ class PageRank(Component):
     _TRUNCATE_EVERY = 6
 
     def transform(self, flow: Flow) -> Flow:
-        from pyspark import StorageLevel
-
         from ..component import require_batch
 
         df = flow[self.input]
@@ -283,7 +280,7 @@ class PageRank(Component):
             .unionAll(edges.select(F.col("__dst").alias("__node")))
             .distinct()
             .repartition("__node")
-            .persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+            .transform(_pin)
         )
         # the degree table is STATIC — join it into the edge list once,
         # instead of re-joining every round (saves one join per
@@ -292,7 +289,7 @@ class PageRank(Component):
         deg = edges.groupBy("__src").agg(F.count(F.lit(1)).alias("__deg"))
         adjacency = edges.join(deg, "__src").repartition("__src")
         probe_loop_plan("PageRank/setup", adjacency)
-        edges = adjacency.persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+        edges = _pin(adjacency)
         n = nodes.count()
         if n == 0:
             raise ValueError(
@@ -451,13 +448,6 @@ class TriangleCount(Component):
     (bigint exact, or double estimate under ``edge_sample``).
     """
 
-    #: closure strategy: "adj" (r15 adjacency-intersect, default) or
-    #: "wedge" (pre-r15 wedge self-join + closure equi-join) — both
-    #: compute the identical integer credit multiset; the wedge arm is
-    #: kept for the interleaved A/B (tools/r15_triangle_ab.py) and the
-    #: bit-identity test.
-    _CLOSURE = "adj"
-
     def __init__(
         self,
         input: str,
@@ -490,8 +480,6 @@ class TriangleCount(Component):
         self.label = label
 
     def transform(self, flow: Flow) -> Flow:
-        from pyspark import StorageLevel
-
         df = flow[self.input]
         # NOTE (r14): materializing the canonical edge set here (eager
         # localCheckpoint, so the caller's edge build runs once instead
@@ -530,7 +518,7 @@ class TriangleCount(Component):
             und.select(F.explode(F.array("u", "v")).alias("n"))
             .groupBy("n")
             .agg(F.count(F.lit(1)).alias("d"))
-            .persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+            .transform(_pin)
         )
         if self.wedge_budget is not None and self.max_degree is None:
             # one agg over the persisted NODE-sized degree frame — the
@@ -585,56 +573,10 @@ class TriangleCount(Component):
         fwd = (F.col("du") < F.col("dv")) | (
             (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
         )
-        # db is no longer carried on the default path: the r15
-        # adjacency-intersect closure needs only the oriented (a, b)
-        # pair — narrower persist.  The wedge arm still needs db for
-        # its (deg, id) wedge ordering.
         ori = withdeg.select(
             F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
-            *(
-                []
-                if self._CLOSURE == "adj"
-                else [F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db")]
-            ),
-        ).persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
-
-        if self._CLOSURE == "wedge":
-            # pre-r15 closure, kept selectable for interleaved A/B and
-            # the adj≡wedge bit-identity test: (deg, id)-ordered wedge
-            # self-join + (x, y) closure equi-join.  Produces the same
-            # integer credit multiset as the adjacency intersect.
-            e1, e2 = ori.alias("e1"), ori.alias("e2")
-            wedges = e1.join(
-                e2,
-                (F.col("e1.a") == F.col("e2.a"))
-                & (
-                    (F.col("e1.db") < F.col("e2.db"))
-                    | (
-                        (F.col("e1.db") == F.col("e2.db"))
-                        & (F.col("e1.b") < F.col("e2.b"))
-                    )
-                ),
-            ).select(
-                F.col("e1.a").alias("apex"),
-                F.col("e1.b").alias("x"),
-                F.col("e2.b").alias("y"),
-            )
-            closing = ori.select(F.col("a").alias("x"), F.col("b").alias("y"))
-            tris = wedges.join(closing, ["x", "y"])
-            counts = (
-                tris.select(
-                    F.explode(F.array("apex", "x", "y")).alias(self.node_col)
-                )
-                .groupBy(self.node_col)
-                .agg(F.count(F.lit(1)).cast("bigint").alias(self.count_col))
-            )
-            if self.edge_sample is not None and self.edge_sample < 1.0:
-                counts = counts.withColumn(
-                    self.count_col,
-                    F.col(self.count_col) / F.lit(float(self.edge_sample) ** 3),
-                )
-            return flow.without(self.input).with_stream(self.output, counts)
+        ).transform(_pin)
 
         # r15 (guide §2.3, verdict #1): ADJACENCY-INTERSECT instead of
         # the wedge self-join + closure equi-join.  The old shape

@@ -29,6 +29,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
+from ..cache import pin as _pin
 from ..component import Component
 from ..flow import Flow
 
@@ -984,8 +985,6 @@ class PHashNearDupPairs(Component):
         self.label = label
 
     def transform(self, flow: Flow) -> Flow:
-        from pyspark import StorageLevel
-
         from ..component import require_batch
 
         df = flow[self.input]
@@ -1034,7 +1033,7 @@ class PHashNearDupPairs(Component):
             F.conv(F.substring(self.phash_col, half + 1, half), 2, 10)
             .cast("bigint")
             .alias("__lo"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ).transform(_pin)
         n_blocks = self.max_distance + 1
         # contiguous blocks covering all n_bits (last takes the slack)
         width = nb // n_blocks

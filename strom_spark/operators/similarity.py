@@ -27,8 +27,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..cache import pin as _pin
 from ..component import Component
-from ..cache import track as _track
 from ..flow import Flow
 from ..functions import vectors as V
 from ..io import spread as _io_spread
@@ -94,13 +94,6 @@ class CosineTopK(Component):
             F.col(self.vec_col).cast("array<double>").alias("__qv"),
             V.norm(F.col(self.vec_col).cast("array<double>")).alias("__qn"),
         ).localCheckpoint(eager=True)
-        # dim probe off the checkpointed queries (one ~free job, only
-        # when STROM_SPARK_UNROLL_DIM=1): at production pair volumes the
-        # per-pair dot/norm then unroll into codegen'd chains instead of
-        # interpreted HOF folds — ~2× per pair, bit-identical via the
-        # size-guarded fallback (see vectors.maybe_dim for the measured
-        # compile-cost crossover that keeps this opt-in)
-        dim = V.probe_dim(queries, "__qv")
         # Norms are precomputed ONCE per row (scalar next to the raw
         # vector) and the per-pair cosine is dot/(qn*cn) — the exact
         # double sequence DuckDB's list_cosine_similarity evaluates, so
@@ -110,7 +103,7 @@ class CosineTopK(Component):
         corpus = flow[self.input].select(
             F.col(self.id_col).alias("neighbor_id"),
             F.col(self.vec_col).cast("array<double>").alias("__cv"),
-            V.norm(F.col(self.vec_col).cast("array<double>"), dim=dim).alias("__cn"),
+            V.norm(F.col(self.vec_col).cast("array<double>")).alias("__cn"),
         )
 
         def scan(qtile):
@@ -119,8 +112,7 @@ class CosineTopK(Component):
                 .withColumn(
                     "cosine",
                     F.round(
-                        V.dot("__qv", "__cv", dim=dim)
-                        / (F.col("__qn") * F.col("__cn")),
+                        V.dot("__qv", "__cv") / (F.col("__qn") * F.col("__cn")),
                         6,
                     ),
                 )
@@ -143,12 +135,8 @@ class CosineTopK(Component):
             # fold-ordered numpy dots are bit-identical to the JVM HOF
             # fold at a fraction of its interpreted per-element cost.
             # Falls back to the JVM broadcast-join scan on unmapped id
-            # types or STROM_SPARK_ARROW_PAIRS=0.
-            sims = (
-                self._scan_arrow(corpus, queries, n_q)
-                if V.arrow_pairs_enabled()
-                else None
-            )
+            # types and on tiles over the byte cap.
+            sims = self._scan_arrow(corpus, queries, n_q)
             if sims is None:
                 sims = scan(queries)
         elif self.on_overflow == "error":
@@ -207,14 +195,14 @@ class CosineTopK(Component):
             return None
         # BYTE guard (r15, verdict #9): the row guard alone lets a
         # high-dim tile blow the driver — rows × dim × 8 is the real
-        # footprint.  Probe one row's dim off the checkpointed frame
-        # (a ~free job) and bail to the JVM broadcast scan when the
-        # estimated matrix exceeds the cap; under the cap, ONE collect
-        # of the slim (id, vec, norm) projection is bounded by
-        # construction.
-        r0 = queries.select(F.size("__qv").alias("__d")).first()
-        d_probe = int(r0["__d"]) if r0 is not None and r0["__d"] is not None else 0
-        if n_q * max(d_probe, 1) * 8 > V.arrow_tile_max_bytes():
+        # footprint.  Size it from the LONGEST query vector (one cheap
+        # aggregate off the checkpointed frame — conservative for
+        # ragged input, where a short first row would under-estimate)
+        # and bail to the JVM broadcast scan when the estimated matrix
+        # exceeds the cap; under the cap, ONE collect of the slim (id,
+        # vec, norm) projection is bounded by construction.
+        d_max = queries.agg(F.max(F.size("__qv"))).first()[0] or 0
+        if n_q * max(d_max, 1) * 8 > V.arrow_tile_max_bytes():
             return None
         rows = queries.collect()  # bounded by the byte guard above
         good, bad = [], []
@@ -496,13 +484,10 @@ class IVFTopK(Component):
                     }
                 )
 
-        # centroid matrix fixes the vector dim — unrolled codegen
-        # dot/norm with the ragged-row guard, no probe job needed
-        dim = V.maybe_dim(int(C.shape[1]))
         assigned = slim.mapInPandas(
             assign,
             schema=f"neighbor_id {nid_type}, centroid_id int, nv array<double>",
-        ).withColumn("nn", V.norm("nv", dim=dim))
+        ).withColumn("nn", V.norm("nv"))
 
         probe_df = _probe_assign(
             flow[self.queries], C, n_probe, self.id_col, self.vec_col
@@ -510,7 +495,7 @@ class IVFTopK(Component):
         joined = _probe_join(
             assigned, probe_df, self.max_broadcast_rows
         ).filter(F.col("query_id") != F.col("neighbor_id"))
-        sims = _rerank_cosine(joined, dim)
+        sims = _rerank_cosine(joined)
         w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
         out = sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= self.k)
         return flow.without(self.input, self.queries).with_stream(self.output, out)
@@ -670,11 +655,11 @@ def _probe_assign(
 
     out = slim.mapInPandas(
         probe, schema=f"query_id {id_type}, centroid_id int, qv array<double>"
-    ).withColumn("qn", V.norm("qv", dim=V.maybe_dim(int(C.shape[1]))))
+    ).withColumn("qn", V.norm("qv"))
     return out.localCheckpoint(eager=True)
 
 
-def _rerank_cosine(joined: DataFrame, dim: int | None) -> DataFrame:
+def _rerank_cosine(joined: DataFrame) -> DataFrame:
     """Exact cosine rerank of a probe-join pair frame carrying
     (query_id, neighbor_id, qv, nv, qn, nn) — the JVM HOF fold.
 
@@ -690,7 +675,7 @@ def _rerank_cosine(joined: DataFrame, dim: int | None) -> DataFrame:
     JVM expression."""
     return joined.withColumn(
         "cosine",
-        F.round(V.dot("qv", "nv", dim=dim) / (F.col("qn") * F.col("nn")), 6),
+        F.round(V.dot("qv", "nv") / (F.col("qn") * F.col("nn")), 6),
     ).select("query_id", "neighbor_id", "cosine")
 
 
@@ -739,17 +724,15 @@ def ivf_search(
     needed = sorted(
         r.centroid_id for r in probe_df.select("centroid_id").distinct().collect()
     )
-    dim = V.maybe_dim(int(C.shape[1]))
     index = (
         spark.read.parquet(index_path)
         .filter(F.col("centroid_id").isin(needed))
-        .withColumn("nn", V.norm("nv", dim=dim))
+        .withColumn("nn", V.norm("nv"))
     )
     sims = _rerank_cosine(
         _probe_join(index, probe_df, max_broadcast_rows).filter(
             F.col("query_id") != F.col("neighbor_id")
-        ),
-        dim,
+        )
     )
     w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     out = sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -951,8 +934,6 @@ class CosineLSHJoin(Component):
         return tables, bits
 
     def transform(self, flow: Flow) -> Flow:
-        from pyspark import StorageLevel
-
         df = flow[self.input]
         if self.bits_per_table is None:
             # Auto sizing counts the corpus inside _resolve; when the
@@ -969,7 +950,7 @@ class CosineLSHJoin(Component):
             # and cache every later pass as 1 partition
             # (dedup.py:MinHashLSHPairs.transform).  Row-group aware
             # and a no-op when the flow already shuffled upstream.
-            df = _io_spread(df).persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+            df = _pin(_io_spread(df))
         n_tables, bits_per_table = self._resolve(df)
         if self.portable:
             # raw vectors: the verify kernel normalizes in float64 and
@@ -983,15 +964,13 @@ class CosineLSHJoin(Component):
                 self.dim, n_tables * bits_per_table
             )
         else:
-            # dim is a constructor param: hoisted-norm normalize (the
-            # one-expression form re-evaluates the norm fold per
-            # ELEMENT — O(dim²) interpreted, paid TWICE via the v1/v2
-            # verify joins) with the unrolled codegen norm
+            # hoisted-norm normalize (the one-expression form
+            # re-evaluates the norm fold per ELEMENT — O(dim²)
+            # interpreted, paid TWICE via the v1/v2 verify joins)
             normed = V.l2_normalize_select(
                 df.select(F.col(self.id_col).alias("id"),
                           F.col(self.vec_col).alias("__rv")),
                 "id", "__rv", "v",
-                dim=V.maybe_dim(self.dim),
             )
             planes = _hyperplanes(self.dim, n_tables * bits_per_table, self.seed)
         # Join key is (table, signature): pure integer equi-join,
@@ -1288,7 +1267,6 @@ class MMRRerank(Component):
             F.col(self.vec_col).cast("array<double>").alias("__v"),
             V.norm(F.col(self.vec_col).cast("array<double>")).alias("__n"),
         )
-        from pyspark import StorageLevel
 
         # A candidate id absent from the vectors stream cannot be
         # redundancy-scored; an inner join would drop it SILENTLY and
@@ -1324,12 +1302,8 @@ class MMRRerank(Component):
         cv = (
             joined
             .select("__q", "__c", "__rel", "__v", "__n")
-            .persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+            .transform(_pin)
         )
-        # probe off the persisted candidate frame (materializes the
-        # cache the self-join needs anyway): per-pair dot unrolls to a
-        # codegen chain instead of the interpreted HOF fold
-        dim = V.probe_dim(cv, "__v")
         a, b = cv.alias("a"), cv.alias("b")
         pairs = a.join(
             b,
@@ -1339,7 +1313,7 @@ class MMRRerank(Component):
             F.col("a.__c").alias("ca"),
             F.col("b.__c").alias("cb"),
             F.round(
-                V.dot(F.col("a.__v"), F.col("b.__v"), dim=dim)
+                V.dot(F.col("a.__v"), F.col("b.__v"))
                 / (F.col("a.__n") * F.col("b.__n")),
                 6,
             ).alias("s"),
@@ -1549,8 +1523,6 @@ class CoOccurrenceJaccard(Component):
         self.label = label
 
     def transform(self, flow: Flow) -> Flow:
-        from pyspark import StorageLevel
-
         # r15 (guide §2.3/§2.4): one group-keyed collect_set does the
         # distinct (set semantics), the size cap, and feeds in-row pair
         # generation — the old plan shuffled distinct postings, joined
@@ -1568,7 +1540,7 @@ class CoOccurrenceJaccard(Component):
         )
         # consumed twice (pairs + sizes): persist the group-sized sets
         # frame — strictly narrower than the old postings cache
-        groups = groups.persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+        groups = _pin(groups)
         sizes = (
             groups.select(F.explode("__items").alias("__i"))
             .groupBy("__i")

@@ -9,7 +9,8 @@ output (``lib/splitter.ex:38-45``).
 
 Catalyst shares the underlying scan across branches; when the branches
 are materialized separately and the input is expensive, pass
-``cache=True`` to persist the input once.
+``cache=True`` to persist the input once (registered with
+:func:`strom_spark.release_caches`).
 
 ``SplitterTree`` ``mode: :hash`` hash-partitions events by
 ``phash2(event, n)`` (``lib/splitter_tree.ex:56-68``).  When the goal is
@@ -25,6 +26,7 @@ from typing import Any, Mapping, Sequence
 
 from pyspark.sql import functions as F
 
+from ..cache import pin as _pin
 from ..component import Component
 from ..flow import Flow
 from .transformer import _resolve_expr
@@ -51,7 +53,7 @@ class Splitter(Component):
     def transform(self, flow: Flow) -> Flow:
         df = flow[self.input]
         if self.cache and not df.isStreaming:
-            df = df.cache()
+            df = _pin(df)
         adds = {}
         for name, pred in self.outputs.items():
             adds[name] = df if pred is None else df.filter(_resolve_expr(pred, df))

@@ -31,8 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import pin as _pin
 from ..component import Component, require_batch
-from ..cache import track as _track
 from ..flow import Flow
 from ..functions import text as TXT
 
@@ -600,19 +600,17 @@ class DSIRWeights(Component):
     def _transform_streaming(
         self, flow: Flow, docs: DataFrame, raw_src: DataFrame, target: DataFrame
     ) -> Flow:
-        from pyspark import StorageLevel
-
         raw_b = (
             self._doc_buckets(raw_src)
             .groupBy("__b")
             .agg(F.sum("__cnt").alias("__cr"))
-            .persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+            .transform(_pin)
         )
         tgt_b = (
             self._doc_buckets(target)
             .groupBy("__b")
             .agg(F.sum("__cnt").alias("__ct"))
-            .persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+            .transform(_pin)
         )
         # ≤ n_buckets rows; __lr arrives as decimal.Decimal, so the
         # replay accumulates cnt·lr EXACTLY like the batch DECIMAL sum
@@ -695,31 +693,29 @@ class DSIRWeights(Component):
         # THREE times and the target's twice).  ``doc_b`` is the one
         # corpus-sized pin (MEMORY_AND_DISK — same materialization cost
         # class as the shuffle that produces it); the bucket tables are
-        # ≤ n_buckets rows.  Every persist is registered with
-        # strom_spark.cache.track — call strom_spark.release_caches()
-        # at pipeline end in a long-lived session; until then Spark's
+        # ≤ n_buckets rows.  Every pin is registered with
+        # strom_spark.cache — call strom_spark.release_caches() at
+        # pipeline end in a long-lived session; until then Spark's
         # LRU eviction keeps memory bounded.
-        from pyspark import StorageLevel
-
-        doc_b = self._doc_buckets(docs).persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+        doc_b = _pin(self._doc_buckets(docs))
         if raw_src is None:
             raw_b = (
                 doc_b.groupBy("__b")
                 .agg(F.sum("__cnt").alias("__cr"))
-                .persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+                .transform(_pin)
             )
         else:
             raw_b = (
                 self._doc_buckets(raw_src)
                 .groupBy("__b")
                 .agg(F.sum("__cnt").alias("__cr"))
-                .persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+                .transform(_pin)
             )
         tgt_b = (
             self._doc_buckets(target)
             .groupBy("__b")
             .agg(F.sum("__cnt").alias("__ct"))
-            .persist(StorageLevel.MEMORY_AND_DISK).transform(_track)
+            .transform(_pin)
         )
         ratio = self._ratio(raw_b, tgt_b)
 

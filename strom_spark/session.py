@@ -39,12 +39,29 @@ def use_state_store(spark: SparkSession, kind: str = "rocksdb") -> None:
         raise ValueError(f"state store must be 'rocksdb' or 'memory', got {kind!r}")
 
 
+def local_cpus() -> int:
+    """Task slots for ``local[N]``: ``SPARK_GRAFT_CPUS`` when set, else
+    ``os.cpu_count()`` (4 when unknown).  Raises ``ValueError`` naming
+    the variable when the value is not a positive integer, so a typo
+    fails before any work runs."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 4
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return cpus
+
+
 def get_spark(
     app_name: str = "strom_spark",
     shuffle_partitions: int | None = None,
     state_store: str | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = local_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     if state_store is None:

@@ -2412,12 +2412,27 @@ def test_triangle_count_hand_computed(spark):
     assert TriangleCount("e", "t")(Flow({"e": path}))["t"].count() == 0
 
 
-def test_triangle_count_adj_wedge_bit_identity(spark):
-    """The r15 adjacency-intersect closure and the pre-r15 wedge
-    self-join must produce the IDENTICAL (node, count) set — same
-    triangles found once each, same integer credit multiset — on a
-    seeded random multigraph with duplicate edges, reversed
-    duplicates, self-loops, hubs, and dangling nodes."""
+def _python_triangle_counts(rows):
+    """Reference per-node triangle participation: canonicalize each
+    edge to (min, max), drop self-loops, dedupe, enumerate every
+    u < v < w with all three edges present, and credit each vertex."""
+    from collections import Counter
+    from itertools import combinations
+
+    und = {(min(u, v), max(u, v)) for u, v in rows if u != v}
+    nodes = sorted({n for e in und for n in e})
+    credit = Counter()
+    for u, v, w in combinations(nodes, 3):
+        if (u, v) in und and (u, w) in und and (v, w) in und:
+            credit.update((u, v, w))
+    return dict(credit)
+
+
+def test_triangle_count_matches_python_counter(spark):
+    """TriangleCount's adjacency-intersect closure against a pure-Python
+    triangle counter on a seeded random multigraph with duplicate
+    edges, reversed duplicates, self-loops, a hub, and dangling
+    nodes."""
     import random
 
     from strom_spark import Flow, TriangleCount
@@ -2427,21 +2442,12 @@ def test_triangle_count_adj_wedge_bit_identity(spark):
     rows += [(0, i) for i in range(1, 30)]  # hub
     rows += [(7, 7), (3, 3)]  # self loops
     edges = spark.createDataFrame(rows, "src bigint, dst bigint")
-    old = TriangleCount._CLOSURE
-    try:
-        TriangleCount._CLOSURE = "adj"
-        a = {
-            r.node: r.n_triangles
-            for r in TriangleCount("e", "t")(Flow({"e": edges}))["t"].collect()
-        }
-        TriangleCount._CLOSURE = "wedge"
-        w = {
-            r.node: r.n_triangles
-            for r in TriangleCount("e", "t")(Flow({"e": edges}))["t"].collect()
-        }
-    finally:
-        TriangleCount._CLOSURE = old
-    assert a == w and len(a) > 10
+    got = {
+        r.node: r.n_triangles
+        for r in TriangleCount("e", "t")(Flow({"e": edges}))["t"].collect()
+    }
+    want = _python_triangle_counts(rows)
+    assert got == want and len(want) > 10
 
 
 def test_triangle_count_bounded_modes(spark):
@@ -2832,25 +2838,47 @@ def test_arrow_pair_kernels_bit_identical(spark, monkeypatch):
     )
     q = df.filter(F.col("vec_id") < 3)
 
-    def knn_rows():
-        out = CosineTopK("c", "q", "o", k=10)(Flow({"c": df, "q": q}))["o"]
-        return sorted(tuple(r) for r in out.collect())
-
-    monkeypatch.setenv("STROM_SPARK_ARROW_PAIRS", "0")
-    jvm = knn_rows()
-    monkeypatch.setenv("STROM_SPARK_ARROW_PAIRS", "1")
-    arrow = knn_rows()
-    assert arrow == jvm and len(jvm) > 0
+    def knn(corpus, queries, cap_bytes=None):
+        """(sorted rows, plan has MapInArrow) for one CosineTopK run."""
+        if cap_bytes is None:
+            monkeypatch.delenv("STROM_SPARK_ARROW_TILE_MAX_BYTES", raising=False)
+        else:
+            monkeypatch.setenv("STROM_SPARK_ARROW_TILE_MAX_BYTES", str(cap_bytes))
+        out = CosineTopK("c", "q", "o", k=10)(
+            Flow({"c": corpus, "q": queries})
+        )["o"]
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return sorted(tuple(r) for r in out.collect()), "MapInArrow" in plan
 
     # r15 byte guard (verdict #9): with a 1-byte tile cap the Arrow
-    # scan must bail to the JVM broadcast path — identical rows, and
+    # scan bails to the JVM broadcast path — the reference rows, and
     # the executed plan carries no MapInArrow node
-    monkeypatch.setenv("STROM_SPARK_ARROW_TILE_MAX_BYTES", "1")
-    out_capped = CosineTopK("c", "q", "o", k=10)(Flow({"c": df, "q": q}))["o"]
-    plan_capped = out_capped._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" not in plan_capped
-    assert sorted(tuple(r) for r in out_capped.collect()) == jvm
-    monkeypatch.delenv("STROM_SPARK_ARROW_TILE_MAX_BYTES")
+    jvm, jvm_arrow = knn(df, q, cap_bytes=1)
+    assert not jvm_arrow
+    arrow, used_arrow = knn(df, q)
+    assert used_arrow
+    assert arrow == jvm and len(jvm) > 0
+
+    # ragged query set: a SHORT first row and long later rows.  The
+    # guard sizes the tile from the longest vector, so a cap between
+    # the first-row estimate (3 × 2 × 8 B) and the max-row estimate
+    # (3 × 64 × 8 B) must still take the JVM path
+    long_rows = [
+        (i, [float((i * 7 + j) % 11) - 5.0 for j in range(64)])
+        for i in (11, 12, 13)
+    ]
+    ragged = spark.createDataFrame(
+        [(10, [0.5, -0.25])] + long_rows,
+        "vec_id bigint, embedding array<double>",
+    ).coalesce(1)
+    rq = ragged.filter(F.col("vec_id") < 13)
+    ragged_jvm, _ = knn(ragged, rq, cap_bytes=1)
+    ragged_capped, ragged_arrow = knn(ragged, rq, cap_bytes=3 * 2 * 8 + 100)
+    assert not ragged_arrow
+    assert ragged_capped == ragged_jvm and len(ragged_jvm) > 0
+    # uncapped, the ragged tile runs in Arrow and still matches
+    ragged_uncapped, ragged_arrow = knn(ragged, rq)
+    assert ragged_arrow and ragged_uncapped == ragged_jvm
 
     # fold_dot_pairs on a joined pair frame vs the JVM fold expression
     a, b = df.alias("a"), df.alias("b")

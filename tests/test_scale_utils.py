@@ -3,6 +3,7 @@ the 100 TB fact-fact join toolkit (SCALE.md)."""
 
 import contextlib
 import io
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -679,10 +680,9 @@ def test_cache_registry_release(spark):
     long-lived session can bulk-release them at pipeline end instead of
     waiting on LRU eviction (r12 advice)."""
     from strom_spark import release_caches
-    from strom_spark.cache import track
+    from strom_spark.cache import pin
 
-    df = spark.range(1000).persist()
-    track(df)
+    df = pin(spark.range(1000))
     df.count()
     assert df.storageLevel.useMemory
     assert release_caches() >= 1
@@ -700,6 +700,64 @@ def test_cache_registry_release(spark):
         "d", "p", threshold=0.8, num_hashes=None, rows_per_band=None
     )(Flow({"d": docs}))["p"].count()
     assert release_caches() >= 1
+
+
+def test_local_cpus_rejects_malformed_value(monkeypatch):
+    """SPARK_GRAFT_CPUS is parsed in one place; garbage fails loudly
+    with the variable's name instead of a bare int() traceback."""
+    from strom_spark.session import local_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == 3
+    for bad in ("four", "", "0", "-2", "2.5"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            local_cpus()
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert local_cpus() == (os.cpu_count() or 4)
+
+
+def test_release_caches_leaves_cache_manager_empty(spark):
+    """Every operator persist goes through strom_spark.cache.pin, so
+    after release_caches() the session's CacheManager holds nothing —
+    including the persists that used to bypass the registry
+    (PHashNearDupPairs, the Gopher repetition helper, and
+    Splitter(cache=True))."""
+    from strom_spark import Flow, PHashNearDupPairs, Splitter, release_caches
+    from strom_spark.functions.text import gopher_repetition_stats
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    release_caches()
+    spark.catalog.clearCache()  # start from an empty cache
+    assert cache_manager.isEmpty()
+
+    phashes = spark.createDataFrame(
+        [(i, format(i * 0x9E3779B97F4A7C15 % (1 << 64), "064b"))
+         for i in range(12)]
+        + [(100, "0" * 64), (101, "0" * 63 + "1")],
+        "asset_id bigint, phash string",
+    )
+    pairs = PHashNearDupPairs("p", "pairs", max_distance=2)(Flow({"p": phashes}))
+    assert (100, 101) in {(r.id_a, r.id_b) for r in pairs["pairs"].collect()}
+
+    docs = spark.createDataFrame(
+        [(1, "a b c a b c a b c\nsame line\nsame line"),
+         (2, "one two three four five")],
+        "doc_id bigint, text string",
+    )
+    # persist_min_rows=1 takes the pinned-subtree regime as well
+    reps = gopher_repetition_stats(docs, "doc_id", "text", persist_min_rows=1)
+    assert reps.count() == 2
+
+    split = Splitter(
+        "d", {"odd": "doc_id % 2 = 1", "even": "doc_id % 2 = 0"}, cache=True
+    )(Flow({"d": docs}))
+    assert split["odd"].count() == 1 and split["even"].count() == 1
+
+    assert not cache_manager.isEmpty()
+    released = release_caches()
+    assert cache_manager.isEmpty()
+    assert released >= 5  # phash sig, 3 repetition pins, splitter input
 
 
 def test_spread_idempotent_across_layers(spark, tmp_path):
