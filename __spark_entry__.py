@@ -824,7 +824,9 @@ def cep_order_fulfillment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     StreamingMatchDecide — applyInPandasWithState + event-time timers,
     the reference's Agent-based decide from
     test/examples/parcels_test.exs:144-201): orders and lineitems ride
-    ONE mixed watermarked event stream, keyed state per order decides
+    ONE mixed watermarked event stream, a per-order state machine
+    (its state kept per hash bucket of orders, one
+    applyInPandasWithState group per bucket) decides
     ALL_PARCELS_SHIPPED / THRESHOLD_EXCEEDED, and orders whose parcels
     never arrive are closed by their event-time TIMER when a far-
     future tick advances the watermark (the reference needs an
@@ -943,13 +945,15 @@ def cep_order_fulfillment_stream_relational(
     event stream, same availableNow drain, same oracle, HASH-EQUAL
     decisions — but every stateful operator is a JVM hash join/agg,
     no per-key Python state machines: measured 26.3s vs 445.2s
-    (16.9x) at sf1.0's 1.5M orders (SCALE.md r10).
+    (16.9x) at sf1.0's 1.5M orders (SCALE.md r10), while the keyed
+    lowering still ran one state group per order.  Since its state is
+    grouped per hash bucket of orders, the keyed row is the faster one
+    at sf0.01 and sf0.1 (SCALE.md, 2026-10-17 follow-up).
 
-    The per-key agent row (cep_order_fulfillment_stream) stays
-    registered: it is the reference-semantics parity surface
-    (per-key tombstones, event-time timers, early completion
-    emission); this row is the scale path when only the final
-    decision set matters.
+    The per-key agent row (cep_order_fulfillment_stream) is the
+    reference-semantics parity surface (per-key tombstones,
+    event-time timers, early completion emission); this row is the
+    all-JVM plan for when only the final decision set matters.
 
     Tick/watermark geometry: a stream-stream join delays its OUTPUT
     watermark by its state-retention bound (span_lb), so the closing

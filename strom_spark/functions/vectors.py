@@ -201,63 +201,6 @@ def _uniform_matrix(col, n):
     return vals.reshape(n, d) if d else vals.reshape(n, 0)
 
 
-def _np_fold_dot(A, B):
-    """Fold-ordered dot for every row pair of two (n, d) matrices:
-    ``acc_i = ((0.0 + a_i0*b_i0) + a_i1*b_i1) + …`` — each elementwise
-    multiply and add is one IEEE-rounded numpy ufunc, so the per-pair
-    double sequence (association order AND the +0.0 seed) is
-    bit-identical to the JVM fold / :func:`_fold_dot_row`."""
-    import numpy as np
-
-    n, d = A.shape
-    acc = np.zeros(n)
-    for i in range(d):
-        acc = acc + A[:, i] * B[:, i]
-    return acc
-
-
-def fold_dot_pairs(df, a_col: str, b_col: str, out_col: str, keep_cols):
-    """Per-pair dot over a joined pair frame via ONE vectorized
-    ``mapInArrow`` pass (guide §4.2) — bit-identical to
-    ``dot(a_col, b_col)`` (see :func:`_np_fold_dot`) at a fraction of
-    the interpreted-HOF cost, amortized over the whole batch.  Returns
-    ``keep_cols + [out_col double]``; the vector columns are consumed
-    inside the kernel and never reach the downstream exchange.  Ragged
-    or null-bearing batches fall back to the per-row fold."""
-    import pyarrow as pa
-
-    keep_cols = list(keep_cols)
-    fields = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in keep_cols
-    )
-    schema = f"{fields}, {out_col} double"
-    slim = df.select(*keep_cols, a_col, b_col)
-    ia, ib = len(keep_cols), len(keep_cols) + 1
-
-    def compute(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            A = _uniform_matrix(batch.column(ia), n)
-            B = _uniform_matrix(batch.column(ib), n)
-            if A is not None and B is not None and A.shape[1] == B.shape[1]:
-                dots = pa.array(_np_fold_dot(A, B), type=pa.float64())
-            else:
-                xs = batch.column(ia).to_pylist()
-                ys = batch.column(ib).to_pylist()
-                dots = pa.array(
-                    [_fold_dot_row(x, y) for x, y in zip(xs, ys)],
-                    type=pa.float64(),
-                )
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(len(keep_cols))] + [dots],
-                names=keep_cols + [out_col],
-            )
-
-    return slim.mapInArrow(compute, schema)
-
-
 _PA_TYPES = {
     "tinyint": "int8", "smallint": "int16", "int": "int32",
     "bigint": "int64", "float": "float32", "double": "float64",

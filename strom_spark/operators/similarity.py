@@ -177,8 +177,8 @@ class CosineTopK(Component):
         crosses the Python boundary; per batch the kernel runs two
         numpy ufuncs per dimension instead of an interpreted lambda
         eval per element per pair.  The per-pair double sequence is
-        bit-identical to the JVM fold (vectors._np_fold_dot: same
-        association order, same +0.0 seed, float→double casts exact),
+        bit-identical to the JVM fold (same association order, same
+        +0.0 seed, float→double casts exact; see vectors._fold_dot_row),
         and the division by the JVM-precomputed norms plus the 6dp
         round stay in the JVM — so cosines cannot move by one bit.
         Ragged corpus batches and malformed query rows take a per-row
@@ -661,18 +661,7 @@ def _probe_assign(
 
 def _rerank_cosine(joined: DataFrame) -> DataFrame:
     """Exact cosine rerank of a probe-join pair frame carrying
-    (query_id, neighbor_id, qv, nv, qn, nn) — the JVM HOF fold.
-
-    NOTE (r14): routing this dot through vectors.fold_dot_pairs
-    (mapInArrow) was tried and REVERTED — on a PAIR frame both
-    64-dim vectors must cross the JVM→Arrow boundary per candidate
-    pair, and the isolated warm noop numbers moved the wrong way
-    (ivf_index_search 3.79 s → 4.54, ann_recall_floor 3.49 → 4.21,
-    sq8_recall_floor 2.03 → 2.43 at sf0.1, equal canaries): list-array
-    serialization of ~1 KB/pair outweighs the interpreted-fold saving.
-    The Arrow win needs the broadcast-matrix shape where only ONE side
-    crosses once (CosineTopK._scan_arrow); pair-joined frames keep the
-    JVM expression."""
+    (query_id, neighbor_id, qv, nv, qn, nn) — the JVM HOF fold."""
     return joined.withColumn(
         "cosine",
         F.round(V.dot("qv", "nv") / (F.col("qn") * F.col("nn")), 6),

@@ -10,18 +10,28 @@ tick stream so orders whose parcels never arrive still decide
 
 Spark-first translation: one keyed stateful operator over the *mixed*
 order+parcel stream (``applyInPandasWithState``), with the tick stream
-replaced by **event-time timers**: an order schedules a timeout at
-``created_at + timeout``; when the watermark passes it the state times
-out and the decision fires.  Late/out-of-order parcels are handled by
-event time natively — parcels arriving before their order simply
-accumulate in state (the reference needs an explicit ``force_order``
-stage for this, ``parcels_test.exs:106-142``).
+replaced by **event-time timers**: an order's deadline is
+``created_at + timeout``; each state row's timer sits at its earliest
+deadline, and when the watermark passes a deadline the order decides.
+Late/out-of-order parcels are handled by event time natively — parcels
+arriving before their order simply accumulate in state (the reference
+needs an explicit ``force_order`` stage for this,
+``parcels_test.exs:106-142``).
 
-At scale: state is per-order (bounded by open orders), partitioned
-across executors by the order key; decided orders keep a small
-tombstone (so late/duplicate events can't re-open them or leak fresh
-state) that a GC timer removes one timeout past the deadline — memory
-tracks the working set plus one timeout window, not history.
+At scale: state is per hash bucket of orders.  Each order lands in
+bucket ``pmod(xxhash64(key), _BUCKETS)``; one state row per bucket holds
+that bucket's open orders as parallel arrays, and one kernel call per
+touched bucket runs the order state machine for all of them, so a
+trigger pays PySpark's per-group cost (Arrow slice, pandas frames, state
+pickle, state-store get/put) at most ``_BUCKETS`` times, however many
+orders it touches.  ``_BUCKETS`` therefore also caps the operator's task
+parallelism.  Decided orders keep a small tombstone (so late/duplicate
+events can't re-open them) that is dropped one timeout past the
+deadline — memory tracks the working set plus one timeout window, not
+history.  ``_BUCKETS`` and the array layout are part of the checkpoint:
+a checkpoint written by the earlier one-row-per-order layout fails
+Spark's state-schema check on restart, and changing ``_BUCKETS`` needs a
+fresh checkpoint too (orders would move to other buckets).
 """
 
 from __future__ import annotations
@@ -31,15 +41,24 @@ from typing import Iterator, Sequence
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..component import Component
 from ..flow import Flow
 
+#: per bucket: the open and tombstoned orders as parallel arrays, then
+#: the buffered timestamps of parcels whose order is not seen yet
 _STATE_SCHEMA = (
-    "expected int, deadline double, on_time int, "
-    "pending array<double>, decided boolean"
+    "ids array<bigint>, expected array<int>, deadline array<double>, "
+    "on_time array<int>, decided array<boolean>, "
+    "pend_ids array<bigint>, pend_ts array<double>"
 )
+#: hash buckets of orders: one state row and at most one kernel call per
+#: trigger each.  Fixed here, never read from the session or the
+#: environment: a different value on restart would route an order to a
+#: different bucket than its state.
+_BUCKETS = 32
 _OUT_SCHEMA = "order_id bigint, decision string"
 
 ALL_SHIPPED = "ALL_PARCELS_SHIPPED"
@@ -92,128 +111,109 @@ class StreamingMatchDecide(Component):
         self.label = label
 
     def transform_df(self, df: DataFrame) -> DataFrame:
-        type_col, order_type, parcel_type = self.type_col, self.order_type, self.parcel_type
+        key_col, type_col = self.key, self.type_col
+        order_type, parcel_type = self.order_type, self.parcel_type
         expected_col, ts_col, timeout_s = self.expected_col, self.ts_col, self.timeout_s
+        timeout_ms = timeout_s * 1000
 
-        # Throughput notes (r10 — measured at sf1.0, 1.5M keyed state
-        # machines): the per-key costs that dominate
-        # applyInPandasWithState are pure-Python object churn, not the
-        # state machine itself.  Three changes bought ~2x:
-        #   1. typed state tuple instead of a pickled dict — no
-        #      pickle.loads/dumps per key per batch;
-        #   2. column-array iteration instead of to_dict("records") —
-        #      no per-event dict allocation; timestamps convert to
-        #      epoch seconds once per group via numpy;
-        #   3. NO per-batch event sort: the on-time-count state machine
-        #      is ORDER-INDEPENDENT within a batch (counts are
-        #      commutative; the decided tombstone makes post-decision
-        #      events no-ops), so the sort the old first-break scan
-        #      required is dead weight.
-        # The remaining floor is the framework's per-group Arrow
-        # round-trip plus the one pd.DataFrame built per decision.
-
-        def kernel(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-            order_id = key[0]
-            # State invariant (multi-batch safe): the decision replayed
-            # in GLOBAL event-time order is ALL_SHIPPED iff the count of
-            # ON-TIME parcels (ts <= deadline) reaches `expected` —
-            # ts-sorted, every on-time parcel precedes every late one,
-            # so the first break of the reference's scan is equivalent —
-            # and THRESHOLD otherwise, fired by the deadline timer once
-            # the watermark guarantees no on-time parcel can still
-            # arrive.  Parcels that land in a micro-batch BEFORE their
-            # ORDER_CREATED event cannot be classified yet (deadline
-            # unknown): their timestamps buffer in `pending` (bounded by
-            # that order's own parcel count) and are re-checked against
-            # the deadline when the order event sets it — a pre-order
-            # batch split can no longer launder a late parcel into an
-            # on-time count.
+        # Throughput: the per-group protocol of applyInPandasWithState
+        # costs ~2 ms of Python per group, far more than the state
+        # machine, so groups are hash buckets of orders, not orders:
+        # a trigger makes at most _BUCKETS calls (which also caps this
+        # stage's task parallelism), and expiry and tombstone GC ride
+        # the same call instead of a second per-order timer visit.  The
+        # price: each call reads and rewrites its whole bucket, so a
+        # trigger's Python cost grows with the open orders in the
+        # buckets it touches, not only with the events it reads.
+        #
+        # Per-order invariant (multi-batch safe): the decision replayed
+        # in GLOBAL event-time order is ALL_SHIPPED iff the count of
+        # ON-TIME parcels (ts <= deadline) reaches `expected` —
+        # ts-sorted, every on-time parcel precedes every late one, so
+        # the first break of the reference's scan is equivalent — and
+        # THRESHOLD otherwise, decided once the watermark passes the
+        # deadline and no on-time parcel can still arrive.  Counts
+        # commute, so events need no sort within a call.  Parcels that
+        # land BEFORE their ORDER_CREATED event cannot be classified
+        # yet (deadline unknown): their timestamps buffer in
+        # pend_ids/pend_ts and are re-checked against the deadline when
+        # the order event sets it, so a pre-order batch split cannot
+        # launder a late parcel into an on-time count.
+        def kernel(_bucket, pdfs: Iterator[pd.DataFrame], state: GroupState):
+            # order id -> [expected, deadline, on_time, decided]
+            orders: dict[int, list] = {}
+            pending: dict[int, list[float]] = {}
             if state.exists:
-                expected, deadline, on_time, pending, decided = state.get
-                pending = list(pending) if pending is not None else []
-            else:
-                expected, deadline, on_time, pending, decided = (
-                    None, None, 0, [], False,
-                )
+                ids, exps, dls, ons, decs, pend_ids, pend_ts = state.get
+                orders = {k: [e, d, o, c] for k, e, d, o, c in zip(ids, exps, dls, ons, decs)}
+                for k, ts in zip(pend_ids, pend_ts):
+                    pending.setdefault(k, []).append(ts)
+            out: list[tuple[int, str]] = []
 
-            if state.hasTimedOut:
-                # timer fired: GC the state (tombstones silently; open
-                # orders decide THRESHOLD — parcels still missing at
-                # the deadline watermark)
-                state.remove()
-                if not decided:
-                    yield pd.DataFrame(
-                        {"order_id": [order_id], "decision": [THRESHOLD]}
-                    )
-                return
-
-            def set_timer(ts_ms: int):
-                # event-time timers must sit above the watermark;
-                # clamping keeps a passed deadline firing on the next
-                # watermark advance instead of erroring
-                state.setTimeoutTimestamp(max(ts_ms, state.getCurrentWatermarkMs() + 1))
-
-            if decided:
-                # tombstone: a late/duplicate event for an
-                # already-decided order must neither re-open it nor
-                # emit a second decision; swallow it and refresh the
-                # GC timer (event-time timers reset on every call)
-                state.update((expected, deadline, on_time, pending, True))
-                set_timer(int((deadline or 0) * 1000 + timeout_s * 1000))
-                return
-
-            decision = None
             for pdf in pdfs:
-                types = pdf[type_col].values
-                # one vectorized epoch-seconds conversion per group
-                tss = pdf[ts_col].values.astype("datetime64[us]").astype(
-                    "int64"
-                ) / 1e6
-                exps = pdf[expected_col].values
-                for i in range(len(types)):
-                    t = types[i]
-                    if t == order_type:
-                        expected = int(exps[i])
-                        deadline = float(tss[i]) + timeout_s
-                        # classify parcels buffered from earlier
-                        # batches: only ts <= deadline count
-                        on_time += sum(1 for p in pending if p <= deadline)
-                        pending = []
-                    elif t == parcel_type:
-                        if deadline is None:
-                            pending.append(float(tss[i]))  # order unseen
-                        elif tss[i] <= deadline:
-                            on_time += 1
-                        # late parcel: never counts; THRESHOLD comes
-                        # from the deadline timer (deciding here would
-                        # race an on-time parcel in a later batch)
-                    else:
+                tss = (pdf[ts_col].values.astype("datetime64[us]").astype("int64") / 1e6).tolist()
+                for k, t, ts, n in zip(
+                    pdf[key_col].tolist(), pdf[type_col].tolist(), tss, pdf[expected_col].tolist()
+                ):
+                    o = orders.get(k)
+                    if o is not None and o[3]:
+                        # tombstone: a late/duplicate event for a decided
+                        # order neither re-opens it nor decides it twice
                         continue
-                    if expected is not None and on_time >= expected:
-                        decision = ALL_SHIPPED
-                        break
-                if decision is not None:
-                    break
+                    if t == order_type:
+                        # a duplicate ORDER of an open order resets
+                        # expected and deadline and keeps its count
+                        deadline = ts + timeout_s
+                        on_time = o[2] if o is not None else 0
+                        on_time += sum(1 for p in pending.pop(k, ()) if p <= deadline)
+                        o = orders[k] = [int(n), deadline, on_time, False]
+                    elif t == parcel_type:
+                        if o is None:
+                            pending.setdefault(k, []).append(ts)  # order unseen
+                            continue
+                        if ts > o[1]:
+                            # late parcel: never counts; THRESHOLD comes
+                            # from the deadline (deciding here would race
+                            # an on-time parcel in a later batch)
+                            continue
+                        o[2] += 1
+                    else:
+                        continue  # ticks and other types keep no state
+                    if o[2] >= o[0]:
+                        o[3] = True
+                        out.append((k, ALL_SHIPPED))
 
-            if decision is not None:
-                # persist a TOMBSTONE (decided=True) instead of
-                # removing state: removal would let a late parcel
-                # re-create fresh state with expected=None that never
-                # times out (unbounded state growth) and a duplicate
-                # ORDER event re-open the order.  The tombstone is
-                # garbage-collected by its own timer one timeout past
-                # the deadline.
-                state.update((expected, deadline, on_time, [], True))
-                set_timer(int((deadline or 0) * 1000 + timeout_s * 1000))
-                yield pd.DataFrame(
-                    {"order_id": [order_id], "decision": [decision]}
-                )
+            # one expiry pass: an open order past its deadline decides
+            # THRESHOLD; a tombstone is dropped one timeout later
+            wm = state.getCurrentWatermarkMs()
+            timer = None
+            for k in list(orders):
+                _, deadline, _, decided = orders[k]
+                expiry = int(deadline * 1000 + timeout_ms) if decided else int(deadline * 1000)
+                if expiry < wm:
+                    del orders[k]
+                    if not decided:
+                        out.append((k, THRESHOLD))
+                elif timer is None or expiry < timer:
+                    timer = expiry
+
+            if orders or pending:
+                exps, dls, ons, decs = (list(c) for c in zip(*orders.values())) if orders else ([],) * 4
+                state.update((
+                    list(orders), exps, dls, ons, decs,
+                    [k for k, tss in pending.items() for _ in tss],
+                    [ts for tss in pending.values() for ts in tss],
+                ))
+                if timer is not None:
+                    # event-time timers must sit above the watermark
+                    state.setTimeoutTimestamp(max(timer, wm + 1))
             else:
-                state.update((expected, deadline, on_time, pending, False))
-                if deadline is not None:
-                    set_timer(int(deadline * 1000))
+                state.remove()
+            if out:
+                yield pd.DataFrame(out, columns=["order_id", "decision"])
 
-        return df.groupBy(self.key).applyInPandasWithState(
+        bucketed = df.withColumn("__bucket", F.pmod(F.xxhash64(key_col), F.lit(_BUCKETS)))
+        return bucketed.groupBy("__bucket").applyInPandasWithState(
             kernel,
             outputStructType=_OUT_SCHEMA,
             stateStructType=_STATE_SCHEMA,
@@ -246,9 +246,12 @@ class StreamingMatchDecideRelational(Component):
     exactly the on-time parcels per order (zero-parcel orders surface
     as one null-padded row), and the window close at
     watermark-past-deadline plays the timer's role.  Decisions emit
-    ONLY when the aggregate window closes — latency trades for
-    throughput: everything runs as JVM hash joins/aggs, measured ~5x
-    the keyed-Python-state lowering at sf1.0 (SCALE.md r10).
+    ONLY when the aggregate window closes.  Everything runs as JVM hash
+    joins/aggs; it measured ~5x the keyed-Python-state lowering at
+    sf1.0 while that lowering ran one state group per order (SCALE.md
+    r10).  With state grouped per hash bucket the keyed lowering is
+    the faster of the two at sf0.01 and sf0.1 (SCALE.md, 2026-10-17
+    follow-up).
 
     Two operational constraints, both inherent to the chained plan:
 

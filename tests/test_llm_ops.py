@@ -2815,15 +2815,13 @@ def test_pagerank_requires_batch(spark):
 
 
 def test_arrow_pair_kernels_bit_identical(spark, monkeypatch):
-    """r14 Arrow kernels: CosineTopK's broadcast-matrix mapInArrow scan
-    and vectors.fold_dot_pairs must be BIT-identical to the JVM HOF
-    fold on every pair — including the edge cases the fold defines the
-    semantics for: ragged rows (zip_with null-pads -> null), null
-    elements (poisoned running sum -> null), empty vectors (fold seed
-    0.0), and -0.0 products (the +0.0 fold seed makes the first
-    -0.0 product round to +0.0)."""
+    """r14 Arrow kernel: CosineTopK's broadcast-matrix mapInArrow scan
+    must be BIT-identical to the JVM HOF fold on every pair — including
+    the edge cases the fold defines the semantics for: ragged rows
+    (zip_with null-pads -> null), null elements (poisoned running sum
+    -> null), empty vectors (fold seed 0.0), and -0.0 products (the
+    +0.0 fold seed makes the first -0.0 product round to +0.0)."""
     from strom_spark import CosineTopK, Flow
-    from strom_spark.functions import vectors as V
 
     df = spark.createDataFrame(
         [
@@ -2879,28 +2877,3 @@ def test_arrow_pair_kernels_bit_identical(spark, monkeypatch):
     # uncapped, the ragged tile runs in Arrow and still matches
     ragged_uncapped, ragged_arrow = knn(ragged, rq)
     assert ragged_arrow and ragged_uncapped == ragged_jvm
-
-    # fold_dot_pairs on a joined pair frame vs the JVM fold expression
-    a, b = df.alias("a"), df.alias("b")
-    pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
-        F.col("a.vec_id").alias("i"),
-        F.col("b.vec_id").alias("j"),
-        F.col("a.embedding").alias("va"),
-        F.col("b.embedding").alias("vb"),
-    )
-    got = {
-        (r.i, r.j): r.d
-        for r in V.fold_dot_pairs(pairs, "va", "vb", "d", ["i", "j"]).collect()
-    }
-    want = {
-        (r.i, r.j): r.d
-        for r in pairs.select("i", "j", V.dot("va", "vb").alias("d")).collect()
-    }
-    assert got == want and len(want) == 15
-    # -0.0 vs +0.0 distinguishes via repr through struct round-trip
-    import math
-    for k in want:
-        x, y = got[k], want[k]
-        assert (x is None) == (y is None)
-        if x is not None:
-            assert math.copysign(1.0, x) == math.copysign(1.0, y)

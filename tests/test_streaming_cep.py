@@ -3,6 +3,8 @@ timers, and state recovery across a checkpoint restart — the two
 Spark-native guarantees that replace the reference's tick stream and
 supervision tree (SURVEY §3.4, §7.2.5)."""
 
+import os
+import random
 import shutil
 import tempfile
 
@@ -10,7 +12,7 @@ import pandas as pd
 import pytest
 
 from strom_spark import Flow
-from strom_spark.streaming.cep import StreamingMatchDecide, ALL_SHIPPED, THRESHOLD
+from strom_spark.streaming.cep import _BUCKETS, StreamingMatchDecide, ALL_SHIPPED, THRESHOLD
 from strom_spark.streaming.control import run_available
 from strom_spark.streaming.stateful import StreamingStatefulTransformer, count_window_kernel
 
@@ -22,6 +24,166 @@ def _write(path, rows):
     pd.DataFrame(
         rows, columns=["order_id", "type", "expected", "ts"]
     ).astype({"order_id": "int64", "expected": "int64", "ts": "datetime64[us]"}).to_parquet(path)
+
+
+def _many_order_stream(seed, n_orders=320, n_files=6, timeout_min=60):
+    """A seeded order/parcel stream over ``n_files`` files plus the
+    decision each order must get.
+
+    Orders of file ``f`` sit on day ``3 * f``, so with a one-day
+    watermark delay each file's undecided orders expire while the next
+    file is read, and every on-time parcel arrives before that.  The
+    mix holds complete, short and late-parcel orders, zero-parcel
+    orders (``expected`` 0 and 1+), parcels staged one file before
+    their order (on-time and late), identical duplicate ORDER events of
+    open orders, and a duplicate ORDER plus an extra parcel one file
+    after an order is decided.  Rows are shuffled within each file.
+
+    The decision rule: ALL_SHIPPED iff the parcels with
+    ``ts <= order_ts + timeout`` reach ``expected``, else THRESHOLD."""
+    rng = random.Random(seed)
+    files = [[] for _ in range(n_files)]
+    orders, parcels = {}, {}
+    for oid in range(1, n_orders + 1):
+        f = rng.randrange(n_files)
+        ots = T0 + pd.Timedelta(days=3 * f) + rng.randrange(120) * MIN
+        on_time = lambda: ots + rng.randrange(timeout_min + 1) * MIN
+        late = lambda: ots + (timeout_min + 1 + rng.randrange(60)) * MIN
+        kind = rng.choice(["complete", "short", "late", "zero", "early", "dup_open", "dup_decided"])
+        expected = rng.randint(1, 3)
+        own, before, after = [], [], []
+        if kind == "complete":
+            own = [on_time() for _ in range(expected + rng.randrange(2))]
+        elif kind == "short":
+            own = [on_time() for _ in range(expected - 1)]
+        elif kind == "late":
+            own = [on_time() for _ in range(expected - 1)] + [late()]
+        elif kind == "zero":
+            expected = rng.choice([0, expected])
+        elif kind == "early" and f > 0:
+            before = [on_time() for _ in range(expected - 1)] + [rng.choice([on_time, late])()]
+        elif kind == "dup_open":
+            own = [on_time() for _ in range(expected - rng.randrange(2))]
+            files[f].append((oid, "ORDER_CREATED", expected, ots))
+        elif kind == "dup_decided" and f < n_files - 1:
+            own = [on_time() for _ in range(expected)]
+            after = [rng.choice([on_time, late])()]
+            files[f + 1].append((oid, "ORDER_CREATED", expected, ots))
+        orders[oid] = (expected, ots)
+        parcels[oid] = own + before + after
+        files[f].append((oid, "ORDER_CREATED", expected, ots))
+        for where, tss in ((f, own), (f - 1, before), (f + 1, after)):
+            if tss:
+                files[where].extend((oid, "PARCEL_SHIPPED", 0, ts) for ts in tss)
+    for rows in files:
+        rng.shuffle(rows)
+    deadline = pd.Timedelta(minutes=timeout_min)
+    want = {
+        oid: ALL_SHIPPED if sum(p <= ots + deadline for p in parcels[oid]) >= e else THRESHOLD
+        for oid, (e, ots) in orders.items()
+    }
+    return files, want
+
+
+def _stage(d, files, first):
+    """Write ``files`` as f{first}.parquet, ... with strictly increasing
+    modification times, so ``maxFilesPerTrigger=1`` reads them in order."""
+    for i, rows in enumerate(files, start=first):
+        path = f"{d}/f{i:02d}.parquet"
+        _write(path, rows)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+_TICK = [(-1, "TICK", 0, T0 + pd.Timedelta(days=1000))]
+
+
+def _state_rows(progress):
+    return [p["stateOperators"][0]["numRowsTotal"] for p in progress if p["stateOperators"]]
+
+
+def test_many_orders_share_buckets_and_match_rule(spark):
+    """Hundreds of orders, many per hash bucket, over a multi-file
+    stream: every order decides exactly once, as the on-time-count
+    rule says, and the state never holds more than one row per
+    bucket."""
+    files, want = _many_order_stream(seed=5)
+    assert len(want) >= 8 * _BUCKETS
+    d = tempfile.mkdtemp(prefix="strom_cep_many_")
+    try:
+        _stage(d, files + [_TICK], first=0)
+        schema = "order_id bigint, type string, expected bigint, ts timestamp"
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(d)
+            .withWatermark("ts", "1 day")
+        )
+        flow = StreamingMatchDecide(
+            "events", "decisions", key="order_id", timeout_s=3600
+        )(Flow({"events": stream}))
+        q = run_available(flow["decisions"], query_name="t_cep_many", output_mode="append")
+        rows = spark.sql("SELECT * FROM t_cep_many").collect()
+        ids = [r.order_id for r in rows]
+        assert len(ids) == len(set(ids)), "an order was decided twice"
+        assert {r.order_id: r.decision for r in rows} == want
+        assert set(want.values()) == {ALL_SHIPPED, THRESHOLD}
+        # one state row per bucket in every trigger, never one per order
+        rows_total = _state_rows(q.recentProgress)
+        assert rows_total and max(rows_total) <= _BUCKETS
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_bucketed_state_survives_restart_and_empties(spark):
+    """Stop after half the files, restart from the checkpoint with the
+    rest plus the closing tick: the two runs together decide every
+    order once, as the rule says, and once the tick's follow-up batch
+    has expired every order and tombstone the state is empty (a tick
+    key keeps no state row)."""
+    files, want = _many_order_stream(seed=11)
+    d = tempfile.mkdtemp(prefix="strom_cep_restart_")
+    try:
+        src, out, ckpt = f"{d}/src", f"{d}/out", f"{d}/ckpt"
+        os.makedirs(src)
+        schema = "order_id bigint, type string, expected bigint, ts timestamp"
+
+        def run_once():
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+                .withWatermark("ts", "1 day")
+            )
+            flow = StreamingMatchDecide(
+                "events", "decisions", key="order_id", timeout_s=3600
+            )(Flow({"events": stream}))
+            q = (
+                flow["decisions"]
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(300)
+            return q
+
+        half = len(files) // 2
+        _stage(src, files[:half], first=0)
+        q1 = run_once()
+        assert 0 < max(_state_rows(q1.recentProgress)) <= _BUCKETS
+        _stage(src, files[half:] + [_TICK], first=half)
+        q2 = run_once()
+
+        rows = spark.read.parquet(out).collect()
+        ids = [r.order_id for r in rows]
+        assert len(ids) == len(set(ids)), "an order was decided twice"
+        assert {r.order_id: r.decision for r in rows} == want
+        assert q2.lastProgress["numInputRows"] == 0  # the tick's follow-up batch
+        assert q2.lastProgress["stateOperators"][0]["numRowsTotal"] == 0
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_streaming_parcels_decide_with_event_time_timeout(spark):
