@@ -1156,15 +1156,16 @@ def _unrolled_simhash_cc(rounds: int) -> str:
     bipartite buckets — the BOUNDED replacement (round 8) for the
     recursive-CTE transitive closure that stalled DuckDB at sf0.1:
     the recursion materialized the DISTINCT doc-doc edge set, which is
-    O(cluster²) in duplicate-heavy buckets.  Each unrolled round here
-    replays EXACTLY one engine iteration (dedup.py:SimHashDedup):
-    bucket min → doc neighbor-min → least() step → pointer jump
-    (lab := min(lab, lab[lab])) — four bounded joins over doc-block
-    rows, never a pair join.  With pointer jumping the label-chain
-    depth halves per round, so `rounds` unrolled rounds converge for
-    any component of pointer depth ≤ 2^rounds — the fixpoint (every
-    node labelled with its component minimum) is unique, so matching
-    the engine needs only convergence, not matched iteration counts.
+    O(cluster²) in duplicate-heavy buckets.  Each unrolled round runs
+    the engine's iteration (dedup.py:SimHashDedup: bucket min → doc
+    neighbor-min → least() step) plus a pointer jump
+    (lab := min(lab, lab[lab])) that SimHashDedup does not have —
+    four bounded joins over doc-block rows, never a pair join.  The
+    jump only speeds convergence: the label-chain depth halves per
+    round, so `rounds` unrolled rounds converge for any component of
+    pointer depth ≤ 2^rounds, and the fixpoint both reach (every node
+    labelled with its component minimum) is unique, so matching the
+    engine needs only convergence, not matched iteration counts.
 
     Every CTE is MATERIALIZED: DuckDB inlines plain CTEs at each
     reference site, and with two references per round the inlining is
@@ -1215,10 +1216,11 @@ def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation over simhash block buckets — linear state, NO pair
     materialization (pairs are O(cluster²): measured 98M pairs on a
     50k-doc 10×-duplicated corpus; this outputs 50k rows).  The oracle
-    replays the engine's own iteration (neighbor-min + pointer jump)
-    as 8 unrolled bounded CTE rounds — see _unrolled_simhash_cc; the
-    previous recursive-CTE closure was all-pairs inside buckets and
-    stalled DuckDB at sf0.1."""
+    runs the engine's neighbor-min iteration as 8 unrolled bounded CTE
+    rounds, each with a pointer jump the engine lacks; the jump only
+    speeds convergence to the same unique fixpoint — see
+    _unrolled_simhash_cc.  The previous recursive-CTE closure was
+    all-pairs inside buckets and stalled DuckDB at sf0.1."""
     flow = Flow({"docs": load_table(spark, sf_dir, "documents")})
     return SimHashDedup("docs", "keep", max_distance=4)(flow)["keep"]
 
@@ -7802,15 +7804,16 @@ def image_phash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image NEAR-duplicate pairs (operators/multimodal.py:
     PHashNearDupPairs): the distinct perceptual-hash group
     representatives from `image_phash_groups`, paired within Hamming
-    distance 8 by the SimHash pigeonhole — candidates meet only
-    inside a (block, block-value) bucket (9 blocks for d=8, never
-    all-pairs), exact distance verified JVM-side as
-    bit_count(hi⊕hi') + bit_count(lo⊕lo') on the conv-packed halves.
-    The oracle cross-joins the ≤12 representatives with DuckDB's
-    native hamming() — exactness of both the pigeonhole recall and
-    the packed-long distance is what's being certified.  At corpus
-    scale the pair stage runs on fingerprints (64 chars), never
-    blobs, and the bucket join is the sub-quadratic path."""
+    distance 8 by the SimHash pigeonhole (functions/hamming.py) —
+    candidates meet only inside a block's integer bucket key (9 blocks
+    for d=8, never all-pairs), each pair kept at its first agreeing
+    block, exact distance verified JVM-side as bit_count(a⊕b) on the
+    hash packed into one bigint.  The oracle cross-joins the ≤12
+    representatives with DuckDB's native hamming() — exactness of
+    both the pigeonhole recall and the packed distance is what's
+    being certified.  At corpus scale the pair stage runs on
+    fingerprints (64 chars), never blobs, and the bucket join is the
+    sub-quadratic path."""
     from strom_spark import ImagePHash, PHashNearDupPairs, bmp_synth
 
     @F.pandas_udf("binary")

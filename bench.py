@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and ends
+stdout with the per-query map as ``{"queries": {name: sec}}`` lines of
+at most 1 KB, then ONE summary line {"metric": ..., "value": total_sec,
+"unit": "sec", "sf": ..., "n_errors": ..., "detail": detail file}.
 
 Each query executes fully (count() action) — collect() is avoided so
 measured time is engine time, not driver materialization of rows.
@@ -253,6 +254,38 @@ def _canary_min(spark, runs: int = 3) -> float:
     return round(min(out), 3)
 
 
+#: longest per-query stdout line; two fit the driver's ~2000-char tail
+_QUERY_LINE_CHARS = 1024
+
+
+def stdout_lines(timings: dict[str, float], *, metric: str, value: float,
+                 sf: float | None, n_errors: int,
+                 detail_name: str) -> list[str]:
+    """The run's closing stdout lines: the per-query warm-min map split
+    over ``{"queries": {...}}`` lines of at most ``_QUERY_LINE_CHARS`` chars
+    that each parse as JSON alone, then one short summary line.
+
+    The driver keeps only a ~2000-char tail of stdout and parses its
+    last line, so the summary holds just the headline fields and names
+    the detail file with everything else; the tail also catches whole
+    query lines that parse without the ones cut off above them."""
+    lines: list[str] = []
+    chunk: dict[str, float] = {}
+    for name, sec in timings.items():
+        grown = json.dumps({"queries": {**chunk, name: round(sec, 3)}},
+                           separators=(",", ":"))
+        if chunk and len(grown) > _QUERY_LINE_CHARS:
+            lines.append(json.dumps({"queries": chunk}, separators=(",", ":")))
+            chunk = {}
+        chunk[name] = round(sec, 3)
+    if chunk:
+        lines.append(json.dumps({"queries": chunk}, separators=(",", ":")))
+    lines.append(json.dumps({"metric": metric, "value": value, "unit": "sec",
+                             "sf": sf, "n_errors": n_errors,
+                             "detail": detail_name}, separators=(",", ":")))
+    return lines
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -432,54 +465,11 @@ def main() -> None:
         except OSError:
             pass  # read-only checkout must not lose the stdout artifact
     print(json.dumps({"detail": detail}, separators=(",", ":")))
-    # r15 (verdict #2a): the per-query map on its OWN guaranteed stdout
-    # line.  Arithmetic forced this: the 96 headline names alone sum to
-    # ~1.6 KB, so a single final line carrying metric+value+queries
-    # cannot fit the driver's 2000-char tail window at ANY value
-    # precision (3-dec: 2591 B, 1-dec: 2406 B, measured) — the r6
-    # failure mode would lose the headline metric itself.  A separate
-    # line keeps the final line short and parseable while the full map
-    # is still in stdout (and in both detail files) for any consumer
-    # that reads more than the tail.
-    print(json.dumps({"queries": {k: round(v, 3) for k, v in timings.items()},
-                      "cpus": cpus}, separators=(",", ":")))
-
-    payload = {
-        "metric": "full_registry_total_runtime" if full
-        else "headline_queries_total_runtime",
-        "value": total,
-        "unit": "sec",
-        # 147 per-query entries would blow the ~2.2 KB final-line
-        # contract in full mode; the per-query map lives in
-        # BENCH_FULL_DETAIL.json there
-        "queries": {"in": "BENCH_FULL_DETAIL.json", "n": len(timings)}
-        if full
-        else {k: round(v, 3) for k, v in timings.items()},
-        "sf": sf,
-    }
-    if errors:
-        # BOUNDED error summary: full messages live in BENCH_DETAIL.json
-        # and the detail stdout line; a mass-failure run (bad sf_dir
-        # failing all 57 queries) must not push the final line's head
-        # out of the captured tail window — the r6 failure mode again
-        payload["n_errors"] = len(errors)
-        payload["errors"] = {
-            k: errors[k][:60] for k in sorted(errors)[:3]
-        }
-    line = json.dumps(payload, separators=(",", ":"))
-    if len(line) > 1400:  # degrade precision before ever risking truncation
-        payload["queries"] = {k: round(v, 2) for k, v in timings.items()}
-        line = json.dumps(payload, separators=(",", ":"))
-    if len(line) > 1900:  # last resort: keep the headline metric parseable
-        payload.pop("queries")
-        payload.pop("errors", None)
-        # point at the per-cpus detail file (r15: survives a
-        # different-cpus re-run; the full map is also on the stdout
-        # line printed above)
-        payload["queries_in"] = cpus_name
-        payload["queries_n"] = len(timings)
-        line = json.dumps(payload, separators=(",", ":"))
-    print(line)
+    metric = ("full_registry_total_runtime" if full
+              else "headline_queries_total_runtime")
+    for line in stdout_lines(timings, metric=metric, value=total, sf=sf,
+                             n_errors=len(errors), detail_name=cpus_name):
+        print(line)
     spark.stop()
 
 

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from ..cache import pin as _pin
 from ..component import Component
 from ..flow import Flow
+from ..functions import hamming as H
 from ..functions import text as TXT
 from ..functions import vectors as V
 from ..io import spread as _spread
@@ -864,22 +865,6 @@ def _simhash_sig(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> D
     )
 
 
-def _validate_simhash_blocks(max_distance: int, bits: int) -> None:
-    """Block-key encoding packs the block index into 4 low bits
-    (``shiftleft(block_bits, 4) + i``), so at most 16 blocks
-    (max_distance <= 15); and each of the ``max_distance+1`` blocks
-    must be at least 1 bit wide or the pigeonhole recall guarantee
-    silently degrades to all-zero block keys (all-pairs buckets /
-    over-merged clusters)."""
-    if not 0 <= max_distance <= 15:
-        raise ValueError(f"max_distance must be in [0, 15], got {max_distance}")
-    if bits < max_distance + 1:
-        raise ValueError(
-            f"bits ({bits}) must be >= max_distance+1 ({max_distance + 1}): "
-            "every pigeonhole block needs at least one signature bit"
-        )
-
-
 class SimHash(Component):
     """Per-document 32-bit SimHash bit-string: (id, simhash)."""
 
@@ -913,8 +898,9 @@ class SimHashPairs(Component):
     """Pairs within Hamming distance <= ``max_distance`` of
     ``bits``-bit SimHash.  Block-split candidate generation (exact
     recall by pigeonhole: distance <= d => some block of d+1 is
-    identical), then exact Hamming verification.  Candidate join
-    shuffles on (block_id, block_bits) — distributed, never all-pairs.
+    identical), then exact Hamming verification (``functions/hamming.py``).
+    Candidate join shuffles on one integer key per (block index, block
+    bits) — distributed, never all-pairs.
     ``bits=64`` doubles block width — fewer bucket collisions when many
     documents share signature prefixes (the scale knob, SCALE.md)."""
 
@@ -929,7 +915,7 @@ class SimHashPairs(Component):
         bits: int = 32,
         label: str | None = None,
     ):
-        _validate_simhash_blocks(max_distance, bits)
+        H.validate_blocks(max_distance, bits)
         self.input = input
         self.output = output or input
         self.id_col = id_col
@@ -950,48 +936,10 @@ class SimHashPairs(Component):
             _simhash_sig_int(df, self.id_col, self.text_col, bits)
             .transform(_pin)
         )
-        n_blocks = self.max_distance + 1
-        width = bits // n_blocks
-        # block i covers bits [i*width, i*width+L) from the MSB; the
-        # last block takes the remainder.  Encode (block bits, block
-        # index) in ONE long join key: integer shuffle key + codegen'd
-        # equi-join, no string concat.
-        def block_bits(sig_col, i: int):
-            length = width if i < n_blocks - 1 else bits - width * (n_blocks - 1)
-            shift = bits - i * width - length
-            return F.shiftrightunsigned(sig_col, shift).bitwiseAND(F.lit((1 << length) - 1))
-
-        def block_key(i: int):
-            return F.shiftleft(block_bits(F.col("sig"), i), 4) + F.lit(i)
-
-        bucketed = sig.select(
-            "id",
-            "sig",
-            F.posexplode(F.array(*[block_key(i) for i in range(n_blocks)])).alias("bi", "bk"),
-        )
-        a, b = bucketed.alias("a"), bucketed.alias("b")
-        # hamming = popcount(xor) rides the join projection (pure
-        # integer codegen).  A pair matching in several blocks would
-        # duplicate; instead of a (wide) distinct shuffle over all
-        # candidate pairs, keep only the FIRST matching block: for
-        # every earlier block j < bi the two block bit-fields must
-        # differ — an unrolled boolean over the already-loaded sigs,
-        # zero extra shuffle.
-        first_match = F.lit(True)
-        for j in range(n_blocks - 1):
-            first_match = first_match & (
-                (F.lit(j) >= F.col("a.bi"))
-                | (block_bits(F.col("a.sig"), j) != block_bits(F.col("b.sig"), j))
-            )
-        out = (
-            a.join(b, (F.col("a.bk") == F.col("b.bk")) & (F.col("a.id") < F.col("b.id")))
-            .filter(first_match)
-            .select(
-                F.col("a.id").alias("d1"),
-                F.col("b.id").alias("d2"),
-                F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).alias("hamming"),
-            )
-            .filter(F.col("hamming") <= self.max_distance)
+        out = H.near_pairs(sig, self.max_distance, bits).select(
+            F.col("id_a").alias("d1"),
+            F.col("id_b").alias("d2"),
+            F.col("distance").alias("hamming"),
         )
         return flow.without(self.input).with_stream(self.output, out)
 
@@ -1000,6 +948,11 @@ class SimHashPairs(Component):
 
     def output_names(self) -> Sequence[str]:
         return (self.output,)
+
+
+#: SimHashDedup edge-table size from which each round join reads its own
+#: copy of the edges, persisted and partitioned on that join's key
+_PARTITION_PERSIST_MIN_ROWS = 5_000_000
 
 
 class SimHashDedup(Component):
@@ -1033,10 +986,9 @@ class SimHashDedup(Component):
         max_distance: int = 3,
         bits: int = 32,
         max_iterations: int = 15,
-        partition_persist_min_rows: int = 5_000_000,
         label: str | None = None,
     ):
-        _validate_simhash_blocks(max_distance, bits)
+        H.validate_blocks(max_distance, bits)
         self.input = input
         self.output = output or input
         self.id_col = id_col
@@ -1044,29 +996,18 @@ class SimHashDedup(Component):
         self.max_distance = max_distance
         self.bits = bits
         self.max_iterations = max_iterations
-        self.partition_persist_min_rows = int(partition_persist_min_rows)
         self.label = label
 
     def transform(self, flow: Flow) -> Flow:
         df = flow[self.input]
         bits = self.bits
         sig = _simhash_sig_int(df, self.id_col, self.text_col, bits)
-        n_blocks = self.max_distance + 1
-        width = bits // n_blocks
-
-        def block_key(i: int):
-            length = width if i < n_blocks - 1 else bits - width * (n_blocks - 1)
-            shift = bits - i * width - length
-            b = F.shiftrightunsigned(F.col("sig"), shift).bitwiseAND(F.lit((1 << length) - 1))
-            return F.shiftleft(b, 4) + F.lit(i)
-
-        edges = sig.select(
-            "id", F.explode(F.array(*[block_key(i) for i in range(n_blocks)])).alias("bk")
-        )
+        keys = H.block_keys(F.col("sig"), self.max_distance, bits)
+        edges = sig.select("id", F.explode(F.array(*keys)).alias("bk"))
         probe_loop_plan("SimHashDedup/setup", edges)
         # the doc→block edge table is STATIC and each round joins it
         # TWICE on different keys (labels on id, bucket minima on bk).
-        # Above `partition_persist_min_rows` keep one persisted copy
+        # Above `_PARTITION_PERSIST_MIN_ROWS` keep one persisted copy
         # PARTITIONED PER JOIN KEY so neither round join re-shuffles
         # the edge table (the PageRank static-adjacency discipline,
         # round 8; a localCheckpoint reports unknown partitioning and
@@ -1082,7 +1023,7 @@ class SimHashDedup(Component):
         # repartitioning the checkpointed RDD pays one slim shuffle
         # per copy instead.
         edges = edges.localCheckpoint(eager=True)
-        if edges.count() >= self.partition_persist_min_rows:
+        if edges.count() >= _PARTITION_PERSIST_MIN_ROWS:
             edges_by_id = _pin(edges.repartition("id"))
             edges_by_bk = _pin(edges.repartition("bk"))
         else:

@@ -29,9 +29,9 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from ..cache import pin as _pin
 from ..component import Component
 from ..flow import Flow
+from ..functions import hamming as H
 
 #: schema for a multimodal asset table
 ASSET_SCHEMA = (
@@ -831,6 +831,9 @@ class ImagePHash(Component):
     shuffled payload is ~64 chars per image — grouping a billion
     images by phash is a routine keyed aggregate; the blobs never
     leave their scan partitions.
+
+    Near-pair search (:class:`PHashNearDupPairs`) packs a hash into one
+    bigint, so it needs ``dim <= 8`` (at most 64 bits).
     """
 
     def __init__(
@@ -928,31 +931,27 @@ class ImagePHash(Component):
 class PHashNearDupPairs(Component):
     """Hamming-distance near-duplicate pairs over perceptual-hash
     fingerprints — completes the :class:`ImagePHash` dedup path: input
-    is ``(id, phash)`` bit-strings (any producer — BMP aHash here, a
-    PIL/pHash UDF in production), output is every unordered pair
-    within ``max_distance`` bit flips, exactly.
+    is ``(id, phash)`` bit-strings of ``n_bits <= 64`` (any producer —
+    BMP aHash here, a PIL/pHash UDF in production), output is every
+    unordered pair ``(id_a, id_b, distance)`` within ``max_distance``
+    bit flips, exactly, each pair once.
 
-    Lowering (the SimHash pigeonhole, dedup.py:SimHashPairs): split
-    the ``n_bits`` string into ``max_distance + 1`` contiguous blocks
-    — any pair at distance ≤ d agrees on at least one whole block —
-    candidates meet ONLY inside a (block_idx, block_value) bucket
-    (sub-quadratic, never all-pairs), then the EXACT distance verifies
-    JVM-side: the bit-string packs into two longs (``conv(_, 2, 10)``)
-    and distance = bit_count(hi⊕hi') + bit_count(lo⊕lo') — no Python,
-    no per-character loop.  DISTINCT collapses pairs that share
-    several blocks.
+    Lowering: the bit-string packs into one bigint (``conv(_, 2, -10)``)
+    and :func:`~strom_spark.functions.hamming.near_pairs` (shared with
+    SimHashPairs) buckets it by pigeonhole blocks and verifies the
+    exact ``bit_count(a ⊕ b)`` JVM-side — never all-pairs, no Python.
 
     At 100 TB the skew story is the hash's: a viral block value (e.g.
     the all-zeros block from flat images) concentrates one bucket.
     ``max_block_freq`` is the guard — the exact hot-shingle cap
-    NgramJaccardPairs applies to text postings: (block_idx, value)
-    buckets holding more than that many fingerprints are DROPPED
-    before the self-join, bounding any bucket's pair fan-out at
-    ``cap²`` regardless of corpus size.  Recall loss is confined to
-    pairs whose ONLY agreeing blocks are viral — in practice
-    degenerate flat images; pairs that also agree on a normal block
-    are still found (the pigeonhole union is a logical OR over
-    blocks).  ``None`` (default) keeps exact pigeonhole recall.
+    NgramJaccardPairs applies to text postings: block buckets holding
+    more than that many fingerprints are DROPPED before the self-join,
+    bounding any bucket's pair fan-out at ``cap²`` regardless of corpus
+    size.  Recall loss is confined to pairs whose ONLY agreeing blocks
+    are viral — in practice degenerate flat images; pairs that also
+    agree on a normal block are still found (the pigeonhole union is a
+    logical OR over blocks).  ``None`` (default) keeps exact pigeonhole
+    recall.
     """
 
     def __init__(
@@ -967,12 +966,7 @@ class PHashNearDupPairs(Component):
         max_block_freq: int | None = None,
         label: str | None = None,
     ):
-        if max_distance < 0:
-            raise ValueError("max_distance must be >= 0")
-        if n_bits % 2 or n_bits < 2:
-            raise ValueError("n_bits must be even and >= 2")
-        if max_distance + 1 > n_bits:
-            raise ValueError("max_distance + 1 blocks cannot exceed n_bits")
+        H.validate_blocks(max_distance, n_bits)
         if max_block_freq is not None and max_block_freq < 2:
             raise ValueError("max_block_freq must be >= 2 (a pair needs 2)")
         self.input = input
@@ -991,23 +985,16 @@ class PHashNearDupPairs(Component):
         require_batch(
             df,
             "PHashNearDupPairs",
-            "the pigeonhole bucket self-join and persist need the full "
-            "fingerprint set (ImagePHash itself streams — collect "
-            "fingerprints per micro-batch first)",
+            "the pigeonhole bucket self-join needs the full fingerprint "
+            "set (ImagePHash itself streams — collect fingerprints per "
+            "micro-batch first)",
         )
         nb = self.n_bits
-        half = nb // 2
-        # PERSIST the signature table: the (max_distance + 1) block
-        # branches each reference it, and without the pin Catalyst
-        # plans every branch with its own copy of the upstream lineage
-        # (measured on image_phash_near_pairs: 19 exchanges/18 scans —
-        # the decode+hash pipeline ran NINE times — vs 4/2 pinned).
-        # Fingerprint rows only (~64 chars + two longs per asset).
         # Loud-fail guard: a hash whose length != n_bits (e.g. an
         # ImagePHash(dim=4) 16-char hash against the default
-        # n_bits=64) would otherwise make substring/conv produce empty
-        # strings and NULL packed longs — distances go NULL and pairs
-        # silently vanish.  raise_error surfaces the mismatch instead.
+        # n_bits=64) would otherwise pack into a narrower bigint whose
+        # blocks are cut at the wrong bits — pairs silently vanish.
+        # raise_error surfaces the mismatch instead.
         ph = F.when(
             F.length(self.phash_col) == nb, F.col(self.phash_col)
         ).otherwise(
@@ -1024,73 +1011,14 @@ class PHashNearDupPairs(Component):
                 )
             )
         )
+        # a negative target base reads the bits as a signed number: a
+        # 64-bit hash with its first bit set packs into a negative
+        # bigint instead of overflowing the cast
         sig = df.select(
-            F.col(self.id_col).alias("__id"),
-            ph.alias("__ph"),
-            F.conv(F.substring(self.phash_col, 1, half), 2, 10)
-            .cast("bigint")
-            .alias("__hi"),
-            F.conv(F.substring(self.phash_col, half + 1, half), 2, 10)
-            .cast("bigint")
-            .alias("__lo"),
-        ).transform(_pin)
-        n_blocks = self.max_distance + 1
-        # contiguous blocks covering all n_bits (last takes the slack)
-        width = nb // n_blocks
-        blocks = []
-        for i in range(n_blocks):
-            start = i * width + 1
-            length = (nb - i * width) if i == n_blocks - 1 else width
-            blocks.append(
-                sig.select(
-                    "__id",
-                    "__hi",
-                    "__lo",
-                    F.lit(i).alias("__blk"),
-                    F.substring("__ph", start, length).alias("__bv"),
-                )
-            )
-        from functools import reduce
-
-        cand = reduce(lambda a, b: a.unionAll(b), blocks)
-        # the NgramJaccardPairs hot-shingle cap, block-bucket form:
-        # drop viral (blk, value) buckets before the self-join so no
-        # bucket fans out more than cap² pairs (shuffle keys on the
-        # same (blk, bv) the pair join uses — one extra keyed agg, no
-        # new shuffle key).  Exact shortcut first: a bucket holds at
-        # most ALL fingerprints, so with n_rows <= cap no bucket can
-        # exceed the cap and the histogram pass is skipped entirely —
-        # semantics identical, zero added stages on small/deduped
-        # inputs (the count is free: sig is persisted and the count
-        # doubles as its materialization; the cap's full-bench cost
-        # was 3 extra tiny stages = +1.4 s on an 8-row rep table).
-        if self.max_block_freq is not None and sig.count() > self.max_block_freq:
-            freq_ok = (
-                cand.groupBy("__blk", "__bv")
-                .agg(F.count(F.lit(1)).alias("__f"))
-                .filter(F.col("__f") <= self.max_block_freq)
-                .drop("__f")
-            )
-            cand = cand.join(freq_ok, ["__blk", "__bv"], "left_semi")
-        a, b = cand.alias("a"), cand.alias("b")
-        dist = F.bit_count(
-            F.col("a.__hi").bitwiseXOR(F.col("b.__hi"))
-        ) + F.bit_count(F.col("a.__lo").bitwiseXOR(F.col("b.__lo")))
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.__blk") == F.col("b.__blk"))
-                & (F.col("a.__bv") == F.col("b.__bv"))
-                & (F.col("a.__id") < F.col("b.__id")),
-            )
-            .select(
-                F.col("a.__id").alias("id_a"),
-                F.col("b.__id").alias("id_b"),
-                dist.alias("distance"),
-            )
-            .filter(F.col("distance") <= self.max_distance)
-            .distinct()
+            F.col(self.id_col).alias("id"),
+            F.conv(ph, 2, -10).cast("bigint").alias("sig"),
         )
+        pairs = H.near_pairs(sig, self.max_distance, nb, self.max_block_freq)
         return flow.without(self.input).with_stream(self.output, pairs)
 
     def input_names(self) -> Sequence[str]:

@@ -164,28 +164,27 @@ def test_simhash_and_pairs(docs):
         assert r.hamming <= 3 and r.d1 < r.d2
 
 
-def test_simhash_dedup_partitioned_persist_path_identical(docs):
-    """The >= partition_persist_min_rows branch (two join-key-
+def test_simhash_dedup_partitioned_persist_path_identical(docs, monkeypatch):
+    """The >= _PARTITION_PERSIST_MIN_ROWS branch (two join-key-
     partitioned persisted edge copies — the 100 TB shuffle-regime
     path) must produce bit-identical clusters to the small-corpus
     checkpoint-only branch AQE broadcast-serves."""
+    from strom_spark.operators import dedup
     from strom_spark.operators.dedup import SimHashDedup
 
     small = docs.limit(200)
-    base = (
-        SimHashDedup("d", "o", max_distance=4)(Flow({"d": small}))["o"]
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
-    forced = (
-        SimHashDedup(
-            "d", "o", max_distance=4, partition_persist_min_rows=1
-        )(Flow({"d": small}))["o"]
-        .toPandas()
-        .sort_values("id")
-        .reset_index(drop=True)
-    )
+
+    def clusters():
+        return (
+            SimHashDedup("d", "o", max_distance=4)(Flow({"d": small}))["o"]
+            .toPandas()
+            .sort_values("id")
+            .reset_index(drop=True)
+        )
+
+    base = clusters()
+    monkeypatch.setattr(dedup, "_PARTITION_PERSIST_MIN_ROWS", 1)
+    forced = clusters()
     assert base.equals(forced)
 
 
@@ -2276,6 +2275,10 @@ def test_phash_pairs_nbits_mismatch_fails_loudly(spark):
         Flow({"p": hashes})
     )["o"].collect()
     assert isinstance(ok, list)
+    # the fingerprint packs into one bigint: wider hashes fail at
+    # construction, not with a cast error at run time
+    with pytest.raises(ValueError, match="exceeds 64 bits"):
+        PHashNearDupPairs("p", "o", n_bits=128)
 
 
 def test_gram_matrix_hand_computed(spark):
@@ -2597,12 +2600,15 @@ def test_phash_pairs_hot_block_cap(spark):
 
     # 8-bit hashes, max_distance=1 -> 2 blocks of 4 bits.  Build a
     # viral first block ('0000' shared by everyone) and distinct
-    # second blocks except one true near-dup pair agreeing there too.
+    # second blocks except for ids 4 and 5, which also agree on their
+    # second block '1010'.
     rows = [
         {"asset_id": 0, "phash": "0000" + "0001"},
         {"asset_id": 1, "phash": "0000" + "0011"},  # d=1 vs id 0
         {"asset_id": 2, "phash": "0000" + "0111"},  # d=1 vs id 1 (blk1 differs)
         {"asset_id": 3, "phash": "0000" + "1111"},
+        {"asset_id": 4, "phash": "0000" + "1010"},
+        {"asset_id": 5, "phash": "0000" + "1010"},  # d=0 vs id 4
     ]
     df = spark.createDataFrame(rows)
 
@@ -2613,14 +2619,14 @@ def test_phash_pairs_hot_block_cap(spark):
         return sorted((r.id_a, r.id_b) for r in out.collect())
 
     uncapped = run(None)
-    assert uncapped == [(0, 1), (1, 2), (2, 3)]
+    assert uncapped == [(0, 1), (1, 2), (2, 3), (4, 5)]
     assert run(100) == uncapped  # non-binding cap: identical output
-    # cap=3 kills the viral all-zeros block-0 bucket (4 members); the
-    # (0,1) pair survives via its agreeing block-1 value '00' -> no:
-    # block 1 values are 0001/0011 (differ).  Survivors are pairs
-    # agreeing on a block-1 bucket of size <= 3 — none do (all block-1
-    # values distinct), so every pair relied solely on the viral block
-    assert run(3) == []
+    # cap=3 kills the viral all-zeros block-0 bucket (6 members).  The
+    # pairs (0,1), (1,2), (2,3) agree on block 0 only and go with it;
+    # (4,5) also agrees on block 1, whose '1010' bucket (2 members)
+    # stays under the cap, so it survives even though its FIRST
+    # agreeing block is the dropped one
+    assert run(3) == [(4, 5)]
     with pytest.raises(ValueError, match="max_block_freq"):
         PHashNearDupPairs("p", "o", max_block_freq=1)
 

@@ -720,9 +720,8 @@ def test_local_cpus_rejects_malformed_value(monkeypatch):
 def test_release_caches_leaves_cache_manager_empty(spark):
     """Every operator persist goes through strom_spark.cache.pin, so
     after release_caches() the session's CacheManager holds nothing —
-    including the persists that used to bypass the registry
-    (PHashNearDupPairs, the Gopher repetition helper, and
-    Splitter(cache=True))."""
+    including the persists that used to bypass the registry (the
+    Gopher repetition helper and Splitter(cache=True))."""
     from strom_spark import Flow, PHashNearDupPairs, Splitter, release_caches
     from strom_spark.functions.text import gopher_repetition_stats
 
@@ -757,7 +756,7 @@ def test_release_caches_leaves_cache_manager_empty(spark):
     assert not cache_manager.isEmpty()
     released = release_caches()
     assert cache_manager.isEmpty()
-    assert released >= 5  # phash sig, 3 repetition pins, splitter input
+    assert released >= 4  # 3 repetition pins, splitter input
 
 
 def test_spread_idempotent_across_layers(spark, tmp_path):

@@ -130,32 +130,66 @@ def test_ivf_recall_vs_bruteforce(spark, emb):
     assert {(r["query_id"], r["neighbor_id"]) for r in full.collect()} == truth
 
 
-def test_simhash64_block_split_is_exact(spark, sf_dir):
-    """64-bit SimHash (the wide-block scale config): the block-split
-    candidate machinery must return EXACTLY the pairs a brute-force
-    hamming over the same signatures finds (pigeonhole recall proof
-    holds for any bit width)."""
+def _assert_simhash_pairs_exact(spark, sf_dir, bits: int, d: int) -> None:
+    """SimHashPairs returns EXACTLY the pairs a brute-force Hamming
+    over the same packed signatures finds."""
     from itertools import combinations
 
     from strom_spark.operators.dedup import SimHashPairs, _simhash_sig_int
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sigs = {
-        r["id"]: r["sig"] for r in _simhash_sig_int(docs, "doc_id", "text", 64).collect()
+        r["id"]: r["sig"]
+        for r in _simhash_sig_int(docs, "doc_id", "text", bits).collect()
     }
-    d = 4
-    expected = {
-        (a, b, bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1"))
-        for a, b in combinations(sorted(sigs), 2)
-        if bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1") <= d
-    }
+    expected = set()
+    for a, b in combinations(sorted(sigs), 2):
+        h = bin((sigs[a] ^ sigs[b]) & (2**64 - 1)).count("1")
+        if h <= d:
+            expected.add((a, b, h))
     got = {
         (r["d1"], r["d2"], r["hamming"])
-        for r in SimHashPairs("docs", "p", max_distance=d, bits=64)(
+        for r in SimHashPairs("docs", "p", max_distance=d, bits=bits)(
             Flow({"docs": docs})
         )["p"].collect()
     }
     assert got == expected
+
+
+def test_simhash64_block_split_is_exact(spark, sf_dir):
+    """64-bit SimHash (the wide-block scale config): the block-split
+    candidate machinery must return EXACTLY the pairs a brute-force
+    hamming over the same signatures finds (pigeonhole recall proof
+    holds for any bit width)."""
+    _assert_simhash_pairs_exact(spark, sf_dir, bits=64, d=4)
+
+
+@pytest.mark.parametrize("bits,d", [(64, 0), (32, 0), (64, 15)])
+def test_simhash_pairs_block_layouts_match_brute_force(spark, sf_dir, bits, d):
+    """The extreme block layouts the validator accepts — one block
+    spanning the whole 64-bit signature (its mask is every bit of a
+    signed long), one 32-bit block, sixteen blocks — each return
+    exactly the brute-force Hamming pairs."""
+    _assert_simhash_pairs_exact(spark, sf_dir, bits, d)
+
+
+def test_simhash_dedup_full_width_block(spark, sf_dir):
+    """SimHashDedup(bits=64, max_distance=0) buckets on the whole
+    signature: each doc keeps the least id sharing its exact
+    signature."""
+    from strom_spark.operators.dedup import SimHashDedup, _simhash_sig_int
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    sigs = {
+        r["id"]: r["sig"] for r in _simhash_sig_int(docs, "doc_id", "text", 64).collect()
+    }
+    got = {
+        r["id"]: r["keep_id"]
+        for r in SimHashDedup("docs", "keep", max_distance=0, bits=64)(
+            Flow({"docs": docs})
+        )["keep"].collect()
+    }
+    assert got == {i: min(j for j in sigs if sigs[j] == s) for i, s in sigs.items()}
 
 
 def test_global_row_number_matches_single_partition(spark, sf_dir):
