@@ -72,6 +72,7 @@ from strom_spark import (
     spread,
     synthetic_assets,
 )
+from strom_spark.cache import cut as _cut
 from strom_spark.functions import text as TXT
 
 # --------------------------------------------------------------------------
@@ -801,7 +802,10 @@ def cep_decision_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: drained streaming CEP results per sf_dir — the query is EAGER (it
 #: runs a real availableNow streaming drain), so repeated registry
-#: sweeps over immutable testdata reuse the first drain
+#: sweeps over immutable testdata reuse the first drain.  The memo is
+#: the read of the drained memory-sink table, whose rows stay on the
+#: driver: release_caches() cannot free it, where a lineage cut would
+#: be freed and fail the next caller's read
 _CEP_STREAM_CACHE: dict[str, DataFrame] = {}
 
 
@@ -911,7 +915,6 @@ def cep_order_fulfillment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.table(name)
             .filter(F.col("order_id") >= 0)
             .select(F.col("order_id").alias("o_orderkey"), "decision")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -1018,7 +1021,6 @@ def cep_order_fulfillment_stream_relational(
             spark.table(name)
             .filter(F.col("order_id") >= 0)  # post-sink: see docstring
             .select(F.col("order_id").alias("o_orderkey"), "decision")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -1804,7 +1806,7 @@ def sq8_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         CosineTopK("c", "q", "o", k=5)(Flow({"c": emb, "q": q()}))["o"]
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+        .transform(_cut, eager=False)
     )
     qz = ScalarQuantize("e", "q")(Flow({"e": emb}))["q"]
     quant = (
@@ -1812,7 +1814,7 @@ def sq8_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
             Flow({"c": qz, "q": qz.filter(F.col("vec_id") < 10)})
         )["o"]
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
+        .transform(_cut, eager=False)
     )
     tot = exact.groupBy(F.lit(1).alias("__k")).agg(
         F.count(F.lit(1)).alias("n_exact"),
@@ -2228,7 +2230,7 @@ def cc_label_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
         Flow({"e": edges})
     )["cc"]
     # one materialization serves all three consumers below
-    cc = cc.localCheckpoint(eager=True)
+    cc = _cut(cc)
     lab1 = cc.select(F.col("node").alias("d1"), F.col("component").alias("__c1"))
     lab2 = cc.select(F.col("node").alias("d2"), F.col("component").alias("__c2"))
     edge_bad = (
@@ -2838,15 +2840,12 @@ def bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # consumed by the sketch build AND the final join: pin the small
     # (neg-customer orders) side once (shared-lineage rule).  Eager
-    # localCheckpoint, NOT persist: the sketch is collected at query-
-    # CONSTRUCTION time, so a persist here outlives the query object in
-    # the session cache registry (one pinned copy per sweep invocation,
-    # never unpersisted).  Checkpoint blocks are owned by the RDD and
-    # freed by the ContextCleaner when this DataFrame is GC'd.
+    # cut: the sketch is collected at query-CONSTRUCTION time, so the
+    # side is materialized here and read again by the final join.
     neg_orders = orders.join(
         neg.select("c_custkey", "c_mktsegment"),
         orders.o_custkey == F.col("c_custkey"),
-    ).select("o_orderkey", "c_mktsegment").localCheckpoint(eager=True)
+    ).select("o_orderkey", "c_mktsegment").transform(_cut)
     sk = BloomFilter("m", "s", key_col="o_orderkey", n_words=4096, k=4,
                      hash="xxhash64")(
         Flow({"m": neg_orders})
@@ -4517,7 +4516,7 @@ def ann_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o"
         ]
         .select(*cols)
-        .localCheckpoint(eager=False)
+        .transform(_cut, eager=False)
     )
     auto = IVFTopK("c", "q", "o", k=10)(  # production auto defaults
         Flow({"c": emb, "q": queries()})
@@ -4527,7 +4526,7 @@ def ann_recall_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
             Flow({"c": emb, "q": queries()})
         )["o"]
         .select(*cols)
-        .localCheckpoint(eager=False)
+        .transform(_cut, eager=False)
     )
 
     marked = gt.join(
@@ -4638,13 +4637,13 @@ def ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches reuse the persisted blocks), but nothing executes at
     # plan-construction time — plan_report/the topology sweep still
     # see (and audit) the real pre-checkpoint plan.
-    pruned = pruned.localCheckpoint(eager=False)
+    pruned = _cut(pruned, eager=False)
     mem = (
         IVFTopK("c", "q", "o", k=10, n_centroids=N_CENTROIDS, n_probe=N_PROBE)(
             Flow({"c": emb, "q": queries()})
         )["o"]
         .select(*cols)
-        .localCheckpoint(eager=False)
+        .transform(_cut, eager=False)
     )
     diff = pruned.exceptAll(mem).unionAll(mem.exceptAll(pruned))
     diff_n = diff.groupBy(F.lit(1).alias("__k")).agg(
@@ -6083,7 +6082,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ]
     )(flow)
-    bl = out["bl"].localCheckpoint(eager=False)
+    bl = _cut(out["bl"], eager=False)
     thresh = (
         bl.groupBy(F.col("l_partkey").alias("pk"))
         .agg(

@@ -378,10 +378,8 @@ def main() -> None:
         # reuses that cache, flattering its number.  Releasing AFTER
         # each query's runs keeps the intra-query warm-cache behavior
         # identical (run 1 populates, runs 2-3 reuse) while isolating
-        # queries from each other.  SPARK_GRAFT_BENCH_KEEP_CACHES=1
-        # restores the old accumulate-forever behavior for comparison.
-        if os.environ.get("SPARK_GRAFT_BENCH_KEEP_CACHES", "") != "1":
-            release_caches()
+        # queries from each other.  Lineage cuts are released too.
+        release_caches()
 
     total = round(sum(timings.values()), 3)
 

@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import pin as _pin
+from ..cache import cut as _cut, pin as _pin
 from ..component import Component
 from ..flow import Flow
 from ..functions import hamming as H
@@ -1022,7 +1022,7 @@ class SimHashDedup(Component):
         # (measured 2.3× on dedup_simhash_clusters at sf0.1);
         # repartitioning the checkpointed RDD pays one slim shuffle
         # per copy instead.
-        edges = edges.localCheckpoint(eager=True)
+        edges = _cut(edges)
         if edges.count() >= _PARTITION_PERSIST_MIN_ROWS:
             edges_by_id = _pin(edges.repartition("id"))
             edges_by_bk = _pin(edges.repartition("bk"))
@@ -1046,7 +1046,7 @@ class SimHashDedup(Component):
                 "id", F.least("lab", F.coalesce("nlab", "lab")).alias("lab")
             )
             probe_loop_plan("SimHashDedup/round", labels)
-            labels = labels.localCheckpoint(eager=True)  # truncate lineage per round
+            labels = _cut(labels)  # truncate lineage per round
             cur_sum = labels.agg(F.sum("lab")).collect()[0][0]
             if cur_sum == prev_sum:
                 break
@@ -1182,7 +1182,7 @@ class EmbeddingNearDupPairs(Component):
         )
         # one localCheckpoint so the n_tiles collects + n_tiles corpus
         # scans reuse a materialized slim instead of re-reading source
-        tiled = tiled.localCheckpoint(eager=True)
+        tiled = _cut(tiled)
         parts = [
             self._gemm_one(
                 tiled.drop("__tile"),

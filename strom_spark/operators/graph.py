@@ -35,7 +35,7 @@ from typing import Sequence
 
 from pyspark.sql import functions as F
 
-from ..cache import pin as _pin
+from ..cache import cut as _cut, pin as _pin
 from ..component import Component
 from ..flow import Flow
 from ..planprobe import probe_loop_plan
@@ -137,7 +137,7 @@ class ConnectedComponents(Component):
                 F.least("lab", F.coalesce("plab", "lab")).alias("lab"),
             )
             probe_loop_plan("ConnectedComponents/round", labels)
-            labels = labels.localCheckpoint(eager=True)
+            labels = _cut(labels)
             frontier = labels.filter(F.col("lab") != F.col("__old")).select(
                 "a", "lab"
             )
@@ -263,7 +263,7 @@ class PageRank(Component):
         den = 1000
         edges = df.select(
             F.col(self.src).alias("__src"), F.col(self.dst).alias("__dst")
-        ).localCheckpoint(eager=True)
+        ).transform(_cut)
         # the static tables are PERSISTED PARTITIONED ON THEIR JOIN
         # KEYS, not localCheckpointed: a checkpointed RDD scan reports
         # unknown partitioning, so every round's edges⋈ranks SMJ
@@ -359,7 +359,7 @@ class PageRank(Component):
                 # the checkpoint costs one eager job and the NEXT round
                 # re-exchanges the rank state once — amortized over
                 # _TRUNCATE_EVERY rounds of zero-exchange flow
-                ranks = ranks.localCheckpoint(eager=True)
+                ranks = _cut(ranks)
         out = ranks.select(
             F.col("__node").alias(self.node_col),
             (F.col("__rank").cast("double") / F.lit(float(scale))).alias(

@@ -21,6 +21,7 @@ from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame
 
+from ..cache import cut as _cut
 from ..component import Component
 from ..flow import Flow
 from ..planprobe import probe_loop_plan
@@ -82,7 +83,7 @@ class Iterate(Component):
             looping = self.body(looping)
             probe_loop_plan("Iterate/round", looping)
             if self.checkpoint_every and (i + 1) % self.checkpoint_every == 0:
-                looping = looping.localCheckpoint(eager=True)
+                looping = _cut(looping)
         else:
             done_parts.append(looping)  # drain on max_iterations
         from functools import reduce

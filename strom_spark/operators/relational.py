@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..cache import cut as _cut
 from ..component import Component, require_batch
 from ..flow import Flow
 from .transformer import _PerStream, _resolve_expr
@@ -141,7 +142,7 @@ def global_row_number(df: DataFrame, order_by: Sequence[Any], rn_col: str = "__r
     ranged = (
         df.repartitionByRange(n, *cols)
         .withColumn("__gpid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .transform(_cut)
     )
     counts = sorted(
         (r["__gpid"], r["cnt"])
@@ -474,7 +475,7 @@ class HeavyHitters(Component):
         # result (<= k x partitions rows) for the count + filter below
         summary = slim.mapInPandas(
             mg_partition, schema="__v string, est bigint"
-        ).localCheckpoint(eager=True)
+        ).transform(_cut)
         n_rows = (
             summary.filter(F.col("__v").isNull()).agg(F.sum("est")).collect()[0][0]
             or 0

@@ -27,7 +27,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..cache import pin as _pin
+from ..cache import cut as _cut, pin as _pin
 from ..component import Component
 from ..flow import Flow
 from ..functions import vectors as V
@@ -93,7 +93,7 @@ class CosineTopK(Component):
             F.col(self.id_col).alias("query_id"),
             F.col(self.vec_col).cast("array<double>").alias("__qv"),
             V.norm(F.col(self.vec_col).cast("array<double>")).alias("__qn"),
-        ).localCheckpoint(eager=True)
+        ).transform(_cut)
         # Norms are precomputed ONCE per row (scalar next to the raw
         # vector) and the per-pair cosine is dot/(qn*cn) — the exact
         # double sequence DuckDB's list_cosine_similarity evaluates, so
@@ -656,7 +656,7 @@ def _probe_assign(
     out = slim.mapInPandas(
         probe, schema=f"query_id {id_type}, centroid_id int, qv array<double>"
     ).withColumn("qn", V.norm("qv"))
-    return out.localCheckpoint(eager=True)
+    return _cut(out)
 
 
 def _rerank_cosine(joined: DataFrame) -> DataFrame:
@@ -1673,7 +1673,7 @@ class GramMatrix(Component):
             df = src.select(
                 F.monotonically_increasing_id().alias("__r"),
                 F.col(self.vec_col).cast("array<double>").alias("__v"),
-            ).localCheckpoint(eager=True)
+            ).transform(_cut)
         ex = df.select("__r", F.posexplode("__v").alias("i", "x"))
         a, b = ex.alias("a"), ex.alias("b")
         pairs = a.join(

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import pin as _pin
+from ..cache import cut as _cut, pin as _pin
 from ..component import Component, require_batch
 from ..flow import Flow
 from ..functions import text as TXT
@@ -159,7 +159,7 @@ class BM25Score(Component):
             "__id",
             F.size("__w").alias("__dl"),
             F.array(*[_count_of(t) for t in terms]).alias("__tfs"),
-        ).localCheckpoint(eager=False)
+        ).transform(_cut, eager=False)
         stats = slim.agg(
             F.count(F.lit(1)).alias("__n"),
             F.avg("__dl").alias("__avgdl"),
@@ -349,7 +349,7 @@ class UnigramLMScore(Component):
         ct = (
             tok.groupBy("__t")
             .agg(F.count(F.lit(1)).alias("__ct"))
-            .localCheckpoint(eager=True)
+            .transform(_cut)
         )
         stats = ct.agg(
             F.sum("__ct").cast("double").alias("__total"),
@@ -433,7 +433,7 @@ class SliceDivergence(Component):
         cst = (
             tok.groupBy("__g", "__t")
             .agg(F.count(F.lit(1)).alias("__cst"))
-            .localCheckpoint(eager=True)
+            .transform(_cut)
         )
         ct = cst.groupBy("__t").agg(F.sum("__cst").alias("__ct"))
         ns = cst.groupBy("__g").agg(F.sum("__cst").alias("__ns"))
@@ -844,7 +844,7 @@ class StupidBackoffLM(Component):
         tok = toks.select(F.explode("__w").alias("__t"))
         uc = (
             tok.groupBy("__t").agg(F.count(F.lit(1)).alias("__uc"))
-            .localCheckpoint(eager=True)
+            .transform(_cut)
         )
         bigrams = toks.select(
             F.explode(
@@ -860,7 +860,7 @@ class StupidBackoffLM(Component):
                 F.col("__bg.p").alias("__bp"), F.col("__bg.c").alias("__bc_t")
             )
             .agg(F.count(F.lit(1)).alias("__bc"))
-            .localCheckpoint(eager=True)
+            .transform(_cut)
         )
         return uc, bc
 

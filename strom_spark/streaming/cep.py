@@ -83,6 +83,13 @@ class StreamingMatchDecide(Component):
       - ``THRESHOLD_EXCEEDED``: a parcel arrived past the deadline, or
         the event-time watermark passed the deadline with parcels still
         missing (state timeout — no tick stream needed).
+
+    Unbounded state: a parcel whose order never arrives stays in its
+    bucket's ``pend_ids``/``pend_ts`` for the life of the query.  It
+    has no deadline, so neither the expiry pass nor a timer drops it,
+    and a stream carrying such parcels never empties its state.
+    ``StreamingMatchDecideRelational`` bounds the same buffer with
+    ``span_lb_s``.
     """
 
     def __init__(

@@ -4,6 +4,7 @@ the 100 TB fact-fact join toolkit (SCALE.md)."""
 import contextlib
 import io
 import os
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -718,17 +719,31 @@ def test_local_cpus_rejects_malformed_value(monkeypatch):
 
 
 def test_release_caches_leaves_cache_manager_empty(spark):
-    """Every operator persist goes through strom_spark.cache.pin, so
-    after release_caches() the session's CacheManager holds nothing —
-    including the persists that used to bypass the registry (the
-    Gopher repetition helper and Splitter(cache=True))."""
-    from strom_spark import Flow, PHashNearDupPairs, Splitter, release_caches
+    """Every operator persist goes through strom_spark.cache.pin and
+    every lineage cut through strom_spark.cache.cut, so after
+    release_caches() the session's CacheManager holds nothing and no
+    RDD persisted during the test is left — including the persists
+    that used to bypass the registry (the Gopher repetition helper and
+    Splitter(cache=True)) and the per-round localCheckpoints of the
+    loop operators."""
+    from strom_spark import (
+        ConnectedComponents,
+        Flow,
+        GramMatrix,
+        Iterate,
+        PHashNearDupPairs,
+        SimHashDedup,
+        Splitter,
+        release_caches,
+    )
     from strom_spark.functions.text import gopher_repetition_stats
 
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     release_caches()
     spark.catalog.clearCache()  # start from an empty cache
     assert cache_manager.isEmpty()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
 
     phashes = spark.createDataFrame(
         [(i, format(i * 0x9E3779B97F4A7C15 % (1 << 64), "064b"))
@@ -753,10 +768,49 @@ def test_release_caches_leaves_cache_manager_empty(spark):
     )(Flow({"d": docs}))
     assert split["odd"].count() == 1 and split["even"].count() == 1
 
+    # values 0..4 need 1-5 rounds of +1: a cut after each of 5 rounds
+    looped = Iterate(
+        "n", body=lambda df: df.withColumn("v", F.col("v") + 1),
+        exit_when=F.col("v") >= 5, max_iterations=10, checkpoint_every=1,
+    )(Flow({"n": spark.range(40).select("id", (F.col("id") % 5).alias("v"))}))
+    assert sorted({r.v for r in looped["n"].collect()}) == [5]
+
+    rng = random.Random(7)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 30, 3)]
+        + [(rng.randrange(40, 60), rng.randrange(40, 60)) for _ in range(15)],
+        "src bigint, dst bigint",
+    )
+    comps = ConnectedComponents("e", "c")(Flow({"e": edges}))
+    labels = {r.node: r.component for r in comps["c"].collect()}
+    assert labels[0] == labels[1] == 0 and labels[3] == 3
+
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
+    base = " ".join(words * 3)
+    texts = [(i, base + f" tail{i % 3}") for i in range(6)] + [
+        (10 + i, " ".join(rng.sample(words, 8)) + f" solo{i}") for i in range(4)
+    ]
+    dedup = SimHashDedup("d", "k", max_distance=3)(
+        Flow({"d": spark.createDataFrame(texts, "doc_id bigint, text string")})
+    )
+    keep = {r.id: r.keep_id for r in dedup["k"].collect()}
+    assert len(keep) == 10 and keep[0] == 0
+
+    vecs = spark.createDataFrame(
+        [([float(rng.randint(-3, 3)) for _ in range(4)],) for _ in range(12)],
+        "embedding array<double>",
+    )
+    gram = GramMatrix("v", "g", id_col=None)(Flow({"v": vecs}))
+    assert gram["g"].count() == 10  # upper triangle of a 4x4 matrix
+
     assert not cache_manager.isEmpty()
     released = release_caches()
     assert cache_manager.isEmpty()
-    assert released >= 4  # 3 repetition pins, splitter input
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    # 3 repetition pins, splitter input, ConnectedComponents' edge pin;
+    # cuts still held by the outputs above: 5 Iterate rounds, the last
+    # ConnectedComponents and SimHashDedup rounds, GramMatrix's ids
+    assert released >= 13
 
 
 def test_spread_idempotent_across_layers(spark, tmp_path):

@@ -673,3 +673,28 @@ def test_relational_lowering_matches_keyed_state_machine(spark):
         }
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["cep_order_fulfillment_stream", "cep_order_fulfillment_stream_relational"],
+)
+def test_cep_stream_memo_survives_release_caches(spark, sf_dir, name):
+    """The registered CEP stream queries memoize their drained result
+    for later calls in the same process.  That memo must be something
+    release_caches() does not free: a second call after the release
+    returns the same decisions, and no RDD is left persisted."""
+    import __spark_entry__ as entry
+    from strom_spark import release_caches
+
+    query = entry.queries()[name]
+    entry._CEP_STREAM_CACHE.clear()  # the first call below drains
+    release_caches()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    first = sorted(tuple(r) for r in query(spark, sf_dir).collect())
+    release_caches()
+    second = sorted(tuple(r) for r in query(spark, sf_dir).collect())
+
+    assert first and first == second
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before == set()

@@ -16,8 +16,8 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: Queries whose registered callable memoizes its result at first
-#: invocation (the streaming CEP drain caches its localCheckpointed
-#: output in _CEP_STREAM_CACHE because the query is EAGER — plan
+#: invocation (the streaming CEP drain caches the read of its drained
+#: memory-sink table in _CEP_STREAM_CACHE because the query is EAGER — plan
 #: sweeps would re-drain the stream).  Their warm-run timings measure
 #: a dict lookup, so a warm-min comparison can neither detect a
 #: regression nor a win there: exclude them and report cold-only.

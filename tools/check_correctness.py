@@ -1,6 +1,8 @@
 """Local replica of the driver's correctness gate: run each
 __spark_entry__ query on Spark and its oracle on DuckDB at sf0.01,
-compare row count, column names, and order-insensitive values.
+compare row count, column names, and order-insensitive values.  A
+query that leaves an RDD persisted after ``release_caches()`` fails as
+``LEAK``.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
@@ -134,12 +136,23 @@ def main():
             failures.append(name)
             continue
         finally:
-            # operator-internal persists are dead once the query is
-            # collected; releasing here keeps decade-SF sweeps from
-            # accumulating disk-backed blocks (the r9 OOM cascade)
+            # operator-internal persists and lineage cuts are dead once
+            # the query is collected; releasing here keeps decade-SF
+            # sweeps from accumulating disk-backed blocks (the r9 OOM
+            # cascade)
             from strom_spark.cache import release_caches
 
             release_caches()
+            # whatever release_caches() missed outlives the query: it
+            # fails the query, and is dropped here so that the next
+            # query is judged on its own
+            leaked = list(spark.sparkContext._jsc.getPersistentRDDs().values())
+            for rdd in leaked:
+                rdd.unpersist(False)
+        if leaked:
+            print(f"LEAK  {name}: {len(leaked)} RDDs")
+            failures.append(name)
+            continue
         t1 = time.time()
         if name not in oracles:
             print(f"ok?   {name}: rows={len(srows)} (no oracle, rows-only) [{t1-t0:.1f}s]")
