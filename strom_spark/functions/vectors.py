@@ -139,21 +139,15 @@ def l2_normalize_select(df, id_col: str, vec_col, out_col: str):
 # fold across a batch instead of evaluating it interpreted per element.
 # ---------------------------------------------------------------------------
 
-def arrow_tile_max_bytes() -> int:
-    """Driver-memory cap for an Arrow pair-kernel query tile, in BYTES
-    (r15, verdict #9): the broadcast-row guard bounds how many rows a
-    tile may hold, but driver memory scales with rows × dim × 8 — a
-    million 4096-dim doubles is ~32 GB even though it passes a 1M-row
-    guard.  Tiles whose estimated matrix exceeds this cap skip the
-    Arrow scan and stay on the JVM broadcast-join path (same results;
-    the JVM relation is subject to Spark's own 8 GB broadcast cap).
-    Tune with ``STROM_SPARK_ARROW_TILE_MAX_BYTES``; default 256 MiB —
-    comfortable beside a default 1-4 GB driver heap."""
-    import os
-
-    return int(
-        os.environ.get("STROM_SPARK_ARROW_TILE_MAX_BYTES", str(256 << 20))
-    )
+#: Driver-memory cap for an Arrow pair-kernel query tile, in BYTES
+#: (r15, verdict #9): the broadcast-row guard bounds how many rows a
+#: tile may hold, but driver memory scales with rows × dim × 8 — a
+#: million 4096-dim doubles is ~32 GB even though it passes a 1M-row
+#: guard.  Tiles whose estimated matrix exceeds this cap skip the
+#: Arrow scan and stay on the JVM broadcast-join path (same results;
+#: the JVM relation is subject to Spark's own 8 GB broadcast cap).
+#: 256 MiB is comfortable beside a default 1-4 GB driver heap.
+ARROW_TILE_MAX_BYTES = 256 << 20
 
 
 def _fold_dot_row(xa, xb):

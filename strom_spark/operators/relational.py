@@ -446,7 +446,7 @@ class HeavyHitters(Component):
             # classic per-row MG bound, and the n//k slack in the
             # candidate filter below is unchanged.  Measured 4.4x
             # faster than the per-row loop on a 20M-row unique-tail
-            # corpus (tools/scale_probe.py).
+            # corpus (SCALE.md HeavyHitters row).
             # A sentinel row (__v NULL — impossible as data, nulls are
             # filtered above) carries the partition's row count so the
             # total needs no second scan.

@@ -14,8 +14,8 @@ parquet leaf without passing through a bounding operator
 (grouping-free Aggregate => exactly 1 row at any SF; Limit => ≤ n
 rows at any SF).
 
-Used by tools/hint_audit.py and the all-query sweep in
-tests/test_topology_dsl.py.
+Used by the all-query sweep in tests/test_topology_dsl.py, which
+checks every flagged query against its adjudicated ``ALLOW`` list.
 """
 from __future__ import annotations
 
@@ -121,9 +121,3 @@ def fact_broadcast_violations(df: DataFrame) -> list[str]:
             violations.append(f"unbounded fact tables {sorted(facts)} under hint:\n{head}")
     return violations
 
-
-def hint_count(df: DataFrame) -> int:
-    """Number of ResolvedHint nodes in the analyzed plan."""
-    hints: list = []
-    _collect_hints(df._jdf.queryExecution().analyzed(), hints)
-    return len(hints)

@@ -56,20 +56,12 @@ def local_cpus() -> int:
     return cpus
 
 
-def get_spark(
-    app_name: str = "strom_spark",
-    shuffle_partitions: int | None = None,
-    state_store: str | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "strom_spark") -> SparkSession:
     cpus = local_cpus()
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
-    if state_store is None:
-        state_store = os.environ.get("STROM_SPARK_STATE_STORE")
-    builder = (
+    return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -82,9 +74,9 @@ def get_spark(
             os.environ.get("STROM_SPARK_ARROW_BATCH", "10000"),
         )
         .config("spark.driver.memory", os.environ.get("STROM_SPARK_DRIVER_MEM", "16g"))
-        # off by default (test/bench noise); tools/scale_probe.py turns
-        # it on to read per-stage shuffle volumes from the REST API
-        .config("spark.ui.enabled", os.environ.get("STROM_SPARK_UI", "false"))
+        # off: tests and benchmarks read jobs and stages from the
+        # in-process status store, which needs no UI or REST port
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # r14: let the planner pick shuffled hash join when its size
         # conditions hold (muchSmaller build side + canBuildLocalHashMap
@@ -92,12 +84,10 @@ def get_spark(
         # and AQE skew splitting applies to SHJ too).  Full-bench A/B
         # at sf0.1: 113.9 s → 99.4 s (−13%), wins spread across ~80 of
         # 96 queries (sorts on the probe side disappear), zero
-        # plan-shape risk rows (no new BNLJ/cartesian).  Env-restorable
-        # for comparison runs.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("STROM_SPARK_PREFER_SMJ", "false"),
-        )
+        # plan-shape risk rows (no new BNLJ/cartesian).  A runtime SQL
+        # conf: spark.conf.set("spark.sql.join.preferSortMergeJoin",
+        # "true") restores sort-merge joins for a comparison run.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # InferFiltersFromGenerate turns explode(f(x)) into a pushed-down
         # `size(f(x)) > 0` filter; predicate pushdown then drags the WHOLE
         # expensive expression (tokenize+shingle HOFs) below the
@@ -109,24 +99,15 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
-        # shuffle/spill codec, env-parameterised (guide §2.3): lz4 is
-        # the measured winner on THIS box (single-machine local[*] —
-        # shuffle rides the page cache, so compression CPU is pure
-        # overhead; r14 A/B: zstd cost +8-15% on the shuffle-heavy
-        # queries with zero network to save).  On a real cluster whose
-        # shuffle crosses NICs, zstd's better ratio usually wins —
-        # flip with STROM_SPARK_IO_CODEC=zstd and measure there.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("STROM_SPARK_IO_CODEC", "lz4"),
-        )
+        # shuffle/spill codec (guide §2.3): on local[N] the shuffle
+        # rides the page cache, so compression CPU is pure overhead;
+        # r14 A/B: zstd cost +8-15% on the shuffle-heavy queries with
+        # zero network to save
+        .config("spark.io.compression.codec", "lz4")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("STROM_SPARK_WAREHOUSE", "/tmp/strom_spark_warehouse"),
         )
+        .getOrCreate()
     )
-    spark = builder.getOrCreate()
-    if state_store:
-        use_state_store(spark, state_store)
-    return spark

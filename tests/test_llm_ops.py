@@ -365,6 +365,44 @@ def test_cooccurrence_jaccard_hand_computed(spark):
     assert {(r.i, r.other) for r in flt.collect()} == {(1, 2), (1, 3)}
 
 
+def test_cooccurrence_jaccard_caps_before_collect_set(spark):
+    """Mega-group bound: every collect_set aggregate of
+    CoOccurrenceJaccard reads an input already filtered to the groups
+    whose exact distinct-item count (the max of a dense rank over the
+    group) is within max_group_size, so a mega-group's item set is
+    never built.  The cap counts DISTINCT items: g1's repeated row
+    keeps it at 2."""
+    from strom_spark import CoOccurrenceJaccard, Flow
+
+    rows = [("g1", 1), ("g1", 2), ("g1", 2)] + [("mega", i) for i in range(10)]
+    df = spark.createDataFrame(rows, "g string, i bigint")
+    out = CoOccurrenceJaccard(
+        "s", "o", group_col="g", item_col="i", max_group_size=2
+    )(Flow({"s": df}))["o"]
+
+    def walk(node):
+        yield node
+        ch = node.children()
+        for k in range(ch.size()):
+            yield from walk(ch.apply(k))
+
+    aggs = [
+        n for n in walk(out._jdf.queryExecution().analyzed())
+        if n.nodeName() == "Aggregate"
+        and "collect_set(" in n.aggregateExpressions().toString()
+    ]
+    assert aggs
+    for agg in aggs:
+        caps = [
+            n for n in walk(agg.child())
+            if n.nodeName() == "Filter"
+            and n.condition().toString().endswith(" <= 2)")
+            and "dense_rank(" in n.child().toString()
+        ]
+        assert len(caps) == 1, agg.toString()
+    assert [tuple(r) for r in out.collect()] == [(1, 2, 1.0)]
+
+
 def test_rrf_fusion_hand_computed(spark):
     """RRFFusion (Cormack et al. 2009): hand-computed fusion of two
     3-row lists with one overlapping id — contributions are
@@ -2828,7 +2866,9 @@ def test_arrow_pair_kernels_bit_identical(spark, monkeypatch):
     -> null), empty vectors (fold seed 0.0), and -0.0 products (the
     +0.0 fold seed makes the first -0.0 product round to +0.0)."""
     from strom_spark import CosineTopK, Flow
+    from strom_spark.functions import vectors as V
 
+    default_cap = V.ARROW_TILE_MAX_BYTES
     df = spark.createDataFrame(
         [
             (0, [0.3, -0.7, 0.11]),
@@ -2844,10 +2884,7 @@ def test_arrow_pair_kernels_bit_identical(spark, monkeypatch):
 
     def knn(corpus, queries, cap_bytes=None):
         """(sorted rows, plan has MapInArrow) for one CosineTopK run."""
-        if cap_bytes is None:
-            monkeypatch.delenv("STROM_SPARK_ARROW_TILE_MAX_BYTES", raising=False)
-        else:
-            monkeypatch.setenv("STROM_SPARK_ARROW_TILE_MAX_BYTES", str(cap_bytes))
+        monkeypatch.setattr(V, "ARROW_TILE_MAX_BYTES", cap_bytes or default_cap)
         out = CosineTopK("c", "q", "o", k=10)(
             Flow({"c": corpus, "q": queries})
         )["o"]

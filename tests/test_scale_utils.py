@@ -718,6 +718,30 @@ def test_local_cpus_rejects_malformed_value(monkeypatch):
     assert local_cpus() == (os.cpu_count() or 4)
 
 
+def test_config_env_vars_match_readme(spark):
+    """Knob drift guard: the env vars the library reads are exactly the
+    README Configuration list, and the settings whose A/Bs are decided
+    resolve to their literal values in the session get_spark() builds."""
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    read = set()
+    for dirpath, _, files in os.walk(os.path.join(root, "strom_spark")):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(dirpath, f)) as fh:
+                    read |= set(re.findall(r'os\.environ\.get\(\s*"(\w+)"', fh.read()))
+    with open(os.path.join(root, "README.md")) as fh:
+        config = fh.read().split("### Configuration", 1)[1].split("\n#", 1)[0]
+    documented = set(re.findall(r"^- `(\w+)` —", config, re.M))
+    assert read == documented, (sorted(read), sorted(documented))
+
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.ui.enabled") == "false"
+    assert conf.get("spark.sql.join.preferSortMergeJoin") == "false"
+    assert conf.get("spark.io.compression.codec") == "lz4"
+
+
 def test_release_caches_leaves_cache_manager_empty(spark):
     """Every operator persist goes through strom_spark.cache.pin and
     every lineage cut through strom_spark.cache.cut, so after
