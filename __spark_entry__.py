@@ -923,112 +923,6 @@ def cep_order_fulfillment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @_q(
-    "cep_order_fulfillment_stream_relational",
-    """
-WITH per_order AS (
-  SELECT l_orderkey, COUNT(*) AS arrived, MAX(l_shipdate) AS last_ship
-  FROM lineitem GROUP BY l_orderkey
-)
-SELECT o.o_orderkey,
-  CASE WHEN COALESCE(p.arrived, 0) >= 1
-        AND NOT COALESCE(p.last_ship > o.o_orderdate + INTERVAL 30 DAY, FALSE)
-       THEN 'ALL_PARCELS_SHIPPED' ELSE 'THRESHOLD_EXCEEDED' END AS decision
-FROM orders o LEFT JOIN per_order p ON o.o_orderkey = p.l_orderkey
-""",
-)
-def cep_order_fulfillment_stream_relational(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The parcels CEP decision as a PURE-JVM STREAMING PLAN
-    (streaming/cep.py:StreamingMatchDecideRelational) — the r10
-    verdict-task-3 answer to the keyed-Python-state lowering's
-    throughput floor: stream-stream LEFT OUTER time-interval join
-    (order x on-time parcels) chained into a windowed count
-    aggregation, decision = CASE(on_time >= expected).  Same mixed
-    event stream, same availableNow drain, same oracle, HASH-EQUAL
-    decisions — but every stateful operator is a JVM hash join/agg,
-    no per-key Python state machines: measured 26.3s vs 445.2s
-    (16.9x) at sf1.0's 1.5M orders (SCALE.md r10), while the keyed
-    lowering still ran one state group per order.  Since its state is
-    grouped per hash bucket of orders, the keyed row is the faster one
-    at sf0.01 and sf0.1 (SCALE.md, 2026-10-17 follow-up).
-
-    The per-key agent row (cep_order_fulfillment_stream) is the
-    reference-semantics parity surface (per-key tombstones,
-    event-time timers, early completion emission); this row is the
-    all-JVM plan for when only the final decision set matters.
-
-    Tick/watermark geometry: a stream-stream join delays its OUTPUT
-    watermark by its state-retention bound (span_lb), so the closing
-    tick sits past max_ts + watermark_delay + span_lb; the
-    order_id >= 0 tick filter happens AFTER the memory sink because
-    Catalyst pushes a pre-sink filter below the watermark operator
-    and the tick never advances it (bisected r10)."""
-    cache_key = (sf_dir, "relational")
-    if cache_key in _CEP_STREAM_CACHE:
-        return _CEP_STREAM_CACHE[cache_key]
-    import shutil
-    import tempfile
-
-    from strom_spark.streaming.cep import StreamingMatchDecideRelational
-    from strom_spark.streaming.control import run_available
-
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    n_parcels = li.groupBy(F.col("l_orderkey").alias("o_orderkey")).agg(
-        F.count("*").alias("__n")
-    )
-    order_events = (
-        orders.join(n_parcels, "o_orderkey", "left")
-        .select(
-            F.col("o_orderkey").alias("order_id"),
-            F.lit("ORDER_CREATED").alias("type"),
-            F.greatest(F.coalesce(F.col("__n"), F.lit(0)), F.lit(1)).alias("expected"),
-            F.col("o_orderdate").alias("ts"),
-        )
-    )
-    parcel_events = li.select(
-        F.col("l_orderkey").alias("order_id"),
-        F.lit("PARCEL_SHIPPED").alias("type"),
-        F.lit(0).cast("bigint").alias("expected"),
-        F.col("l_shipdate").alias("ts"),
-    )
-    max_ts = orders.agg(F.max("o_orderdate")).collect()[0][0]
-    import datetime
-
-    # tick clears watermark_delay (3000d, covers the event-time span
-    # under any file split) + span_lb (2600d join retention) + margin
-    tick = spark.createDataFrame(
-        [(-1, "TICK", 1, max_ts + datetime.timedelta(days=5700))],
-        "order_id bigint, type string, expected bigint, ts timestamp",
-    )
-    d = tempfile.mkdtemp(prefix="strom_cep_rel_")
-    try:
-        order_events.unionByName(parcel_events).write.mode("overwrite").parquet(
-            f"{d}/a_events"
-        )
-        tick.write.mode("overwrite").parquet(f"{d}/z_tick")
-        schema = "order_id bigint, type string, expected bigint, ts timestamp"
-        stream = spark.readStream.schema(schema).parquet(f"{d}/*")
-        op = StreamingMatchDecideRelational(
-            "events", "decisions", key="order_id",
-            timeout_s=30 * 86400, span_lb_s=2600 * 86400,
-        )
-        decisions = op.transform_df(stream, "3000 days")
-        name = "t_cep_rel_drain"
-        run_available(decisions, query_name=name, output_mode="append")
-        out = (
-            spark.table(name)
-            .filter(F.col("order_id") >= 0)  # post-sink: see docstring
-            .select(F.col("order_id").alias("o_orderkey"), "decision")
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    _CEP_STREAM_CACHE[cache_key] = out
-    return out
-
-
-@_q(
     "iterate_to_ten",
     """
 SELECT event_id,
@@ -4372,9 +4266,9 @@ def semdedup_dup_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, the per-cluster GEMM, or the auto-k resolution — not
     clustering luck.  This row is what certifies SemDeDup at decade
     SFs where the pinned-pivot ``semdedup_flags`` oracle's in-cluster
-    quadratic replay is DuckDB-infeasible (tools/big_sweep.py
-    INVARIANT_COVER), and the auto-k it exercises is the fix for the
-    Σcᵢ²=N²/k quadratic at fixed k (dedup.py:SemDeDup docstring).
+    quadratic replay is DuckDB-infeasible, and the auto-k it exercises
+    is the fix for the Σcᵢ²=N²/k quadratic at fixed k
+    (dedup.py:SemDeDup docstring).
     ``n_planted`` is counted from the planted frame (cross-joined
     1-row stat) so a short plant is distinguishable from a flagging
     regression."""

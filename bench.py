@@ -383,34 +383,6 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
 
-    # Dedicated CEP-streaming probe (r11, verdict task 7): both CEP
-    # stream rows memoize their drained result (the driver compares
-    # the same DataFrame repeatedly), so their WARM numbers are dict
-    # lookups and bench_compare excludes them — which left the
-    # relational lowering's speedup tracked only at sf1.0 in SCALE.md.
-    # Time each lowering COLD here (cache cleared between runs) so
-    # BENCH_DETAIL carries a comparable per-round number.  Probe cost
-    # is outside the headline metric by construction.
-    cep_probe: dict[str, float] = {}
-    try:
-        cache = getattr(entrymod, "_CEP_STREAM_CACHE", None)
-        if cache is not None:
-            for label, qname in (
-                ("relational_s", "cep_order_fulfillment_stream_relational"),
-                ("per_key_s", "cep_order_fulfillment_stream"),
-            ):
-                cache.clear()
-                t0 = time.time()
-                qs[qname](spark, sf_dir).count()
-                cep_probe[label] = round(time.time() - t0, 3)
-            cache.clear()
-            if cep_probe.get("relational_s"):
-                cep_probe["speedup"] = round(
-                    cep_probe["per_key_s"] / cep_probe["relational_s"], 2
-                )
-    except Exception as e:  # the probe must never lose the artifact
-        cep_probe["error"] = f"{type(e).__name__}: {str(e)[:120]}"
-
     # Round-7 artifact contract fix: the driver captures only a ~2.2 KB
     # TAIL of stdout and parses the FINAL line as JSON.  Round 6 printed
     # one giant line (warm + cold + fingerprint); its head — including
@@ -434,13 +406,7 @@ def main() -> None:
         # queries whose callable memoizes its first result (the eager
         # streaming CEP drain): their WARM numbers time a dict lookup —
         # compare them cold-only (tools/bench_compare.py skips them)
-        "eager_cached_warm_invalid": ["cep_order_fulfillment_stream",
-                                      "cep_order_fulfillment_stream_relational"],
-        # cold-timed fresh drains of both CEP stream lowerings (cache
-        # cleared), the per-round comparable number for the relational
-        # speedup story (16.9x at sf1.0; fixed micro-batch overhead
-        # compresses it at small SF)
-        "cep_stream_probe": cep_probe,
+        "eager_cached_warm_invalid": ["cep_order_fulfillment_stream"],
     }
     # r15 (verdict #2b): the 8-core scaling re-run used to CLOBBER the
     # 32-core BENCH_DETAIL.json — per-query evidence for the main run

@@ -26,6 +26,15 @@ read after its cut is released fails with Spark's
 never release in the middle of a build (Iterate's output reads the
 cuts of earlier rounds), and never keep a frame that reads a cut
 across :func:`release_caches`.
+
+Two process memos live outside this registry by design, because they
+hold no Spark cache: ``similarity._TRAIN_MEMO`` (k-means centroids,
+weakly keyed on the corpus frame object) and
+``__spark_entry__._CEP_STREAM_CACHE`` (reads of drained memory-sink
+tables, whose rows stay on the driver).  :func:`release_caches` frees
+neither.  The CEP memo must survive it, since the next call returns
+the memoized frame; ``test_cep_stream_memo_survives_release_caches``
+checks that.
 """
 
 from __future__ import annotations

@@ -302,16 +302,9 @@ class MinHashLSHPairs(Component):
     signatures become bucket keys; only same-bucket pairs are
     candidates (sub-quadratic).  Candidates are then verified with a
     Jaccard join restricted to candidate ids, so the output has no
-    false positives at the hashed-set level; recall is the standard
+    false positives; recall is the standard
     LSH S-curve (32 hashes / 16 bands × 2 rows -> P(catch | j=0.8) ≈
     1-(1-0.64)^16 ≈ 0.9999).
-
-    **Hashed-set Jaccard.**  The verify Jaccard is computed over the
-    sets of xxhash64-hashed shingles, not over the shingle strings.
-    A 64-bit collision between two distinct shingles shrinks a set
-    (expected collisions ≈ n²/2^65 for n distinct shingles), so a pair
-    whose Jaccard sits exactly at ``threshold`` may land on either
-    side of it: output at the boundary is probabilistic.
 
     **Auto banding (r12 — the CosineLSHJoin auto-sizing discipline,
     similarity.py).**  ``rows_per_band=None`` resolves (rows, bands)
@@ -450,36 +443,15 @@ class MinHashLSHPairs(Component):
         return best
 
     def _doc_shingles(self, df: DataFrame) -> DataFrame:
-        """(id, sh: array<bigint>) — distinct shingle set per doc as
-        xxhash64 values, no explode/shuffle; the one subtree both the
-        signature and the verify paths hang off.
-
-        r15 (guide §2.3, verdict #8): shingles are hashed to int64
-        HERE, once, instead of carrying array<string> shingles through
-        the persist and both verify-join exchanges — the widest frames
-        in the plan shrink ~3-4× (a 3-word shingle averages 20-30 B vs
-        8 B a long).  The signature path is bit-identical: it already
-        started from ``pmod(xxhash64(shingle), P)``, which now reads
-        the precomputed hash.  The verify path's exact Jaccard compares
-        hashed SETS: ``array_distinct`` keeps |set| semantics exact
-        unless two distinct shingles collide in 64 bits (expected
-        collisions ≈ n²/2^65 — ~5e-8 at a million distinct shingles;
-        the minhash family is oracle-verified hash-exact at every
-        bench SF).  At true 100 TB corpus scale a handful of global
-        collisions would perturb individual Jaccards by ~1/|set| —
-        far below the threshold granularity the operator dedups at."""
+        """(id, sh: array<string>) — distinct shingle set per doc, no
+        explode/shuffle; the one subtree both the signature and the
+        verify paths hang off."""
         slim = _spread(
             df.select(F.col(self.id_col).alias("id"), F.col(self.text_col).alias("__text"))
         )
         toks = slim.select("id", TXT.tokens("__text").alias("__toks"))
-        grams = toks.select(
-            "id", TXT.shingles_of_tokens(F.col("__toks"), self.k).alias("__g")
-        )
-        return grams.select(
-            "id",
-            F.array_distinct(
-                F.transform("__g", lambda s: F.xxhash64(s))
-            ).alias("sh"),
+        return toks.select(
+            "id", TXT.shingles_of_tokens(F.col("__toks"), self.k).alias("sh")
         )
 
     #: Mersenne prime 2^31 - 1: (a*h + b) stays under 2^62 — no long
@@ -498,8 +470,7 @@ class MinHashLSHPairs(Component):
         transform path hands in its (persisted, in auto mode) shingle
         subtree so tokenization isn't re-derived per consumer.
 
-        Each shingle is string-hashed ONCE (xxhash64, precomputed in
-        ``_doc_shingles`` since r15); the n min-hash
+        Each shingle is string-hashed ONCE (xxhash64); the n min-hash
         "permutations" are modular linear transforms a_i*h + b_i mod
         (2^31-1) of that one hash — the standard MinHash family (same
         as Spark MLlib's MinHashLSH).  Per posting: 1 string hash + n
@@ -509,10 +480,8 @@ class MinHashLSHPairs(Component):
         hash only affects recall, not correctness."""
         import random
 
-        # sh already carries xxhash64(shingle) longs (r15) — the pmod
-        # input is the identical value the string hash produced before
-        postings = doc_sh.select("id", F.explode("sh").alias("__h64")).select(
-            "id", F.pmod(F.col("__h64"), F.lit(self._P)).alias("__h")
+        postings = doc_sh.select("id", F.explode("sh").alias("shingle")).select(
+            "id", F.pmod(F.xxhash64("shingle"), F.lit(self._P)).alias("__h")
         )
         rng = random.Random(97)
         coeffs = [
@@ -567,9 +536,9 @@ class MinHashLSHPairs(Component):
             # plan, lands on the first consumer's critical path.  r14
             # measured it with array<string> shingles
             # (dedup_minhash_clusters 2.6 s → 3.7 s at sf0.1), and
-            # again with r15's int64 shingle sets in
-            # plans/r15/minhash_pin_ab.jsonl: warm-min without the
-            # persist 2.943 s vs 3.462 s with it on
+            # again with the narrower int64 shingle hashes (since
+            # reverted) in plans/r15/minhash_pin_ab.jsonl: warm-min
+            # without the persist 2.943 s vs 3.462 s with it on
             # dedup_minhash_clusters, 2.313 s vs 2.471 s on
             # dedup_minhash_lsh.
             doc_sh = _pin(doc_sh)
@@ -679,8 +648,7 @@ class MinHashLSHPairs(Component):
         # are few, so per-pair array_intersect beats re-deriving an
         # inverted-index join (half the plan, no second postings pass).
         # Explicit widths on both verify exchanges: the frames carry
-        # the per-doc shingle-hash arrays (array<bigint> since r15 —
-        # the former array<string> version was the sf10 spill surface)
+        # full shingle arrays, the sf10 spill surface
         s1 = doc_sh.select(F.col("id").alias("d1"), F.col("sh").alias("__s1"))
         s2 = doc_sh.select(F.col("id").alias("d2"), F.col("sh").alias("__s2"))
         out = (
@@ -1651,11 +1619,16 @@ class SubstringDedup(Component):
             #     representative, so its duplicated-flag and canonical
             #     owner are identical with the copies removed.
             # The copies are re-expanded from these rules after the
-            # core pass.
-            base = df.filter(F.col(self.text_col).isNotNull()).select(
-                F.col(self.id_col), F.col(self.text_col)
+            # core pass.  The hashed input is pinned: reps, tagged and
+            # members all read it, and unpinned each would re-run the
+            # input's whole lineage.
+            grouped = _pin(
+                df.filter(F.col(self.text_col).isNotNull()).select(
+                    F.col(self.id_col),
+                    F.col(self.text_col),
+                    F.md5(F.col(self.text_col)).alias("__th"),
+                )
             )
-            grouped = base.withColumn("__th", F.md5(F.col(self.text_col)))
             reps = grouped.groupBy("__th").agg(
                 F.min(self.id_col).alias("__rep")
             )

@@ -40,6 +40,11 @@ import weakref
 #: same frame in one build — identical seeded training, two sample
 #: jobs.  Weak keys mean the entry dies with the frame; a fresh
 #: DataFrame per bench run guarantees nothing survives across runs.
+#: The key is the object, not its data: a hit assumes the same frame
+#: still reads the same rows, so it holds only for immutable sources.
+#: A frame kept alive over a table or path that is rewritten in place
+#: keeps returning the centroids trained on the old rows.  The memo
+#: holds no Spark cache, and release_caches() does not clear it.
 _TRAIN_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict]" = (
     weakref.WeakKeyDictionary()
 )

@@ -88,8 +88,6 @@ class StreamingMatchDecide(Component):
     bucket's ``pend_ids``/``pend_ts`` for the life of the query.  It
     has no deadline, so neither the expiry pass nor a timer drops it,
     and a stream carrying such parcels never empties its state.
-    ``StreamingMatchDecideRelational`` bounds the same buffer with
-    ``span_lb_s``.
     """
 
     def __init__(
@@ -230,153 +228,6 @@ class StreamingMatchDecide(Component):
 
     def transform(self, flow: Flow) -> Flow:
         return flow.without(self.input).with_stream(self.output, self.transform_df(flow[self.input]))
-
-    def input_names(self) -> Sequence[str]:
-        return (self.input,)
-
-    def output_names(self) -> Sequence[str]:
-        return (self.output,)
-
-
-class StreamingMatchDecideRelational(Component):
-    """The fulfillment decision as a PURE-JVM streaming plan — no
-    Python state at all: stream-stream LEFT OUTER time-interval join
-    (orders x parcels on the key, parcel on-time iff
-    ``pts <= ots + timeout_s``) chained into a windowed count
-    aggregation (Spark multiple-stateful-operator support), with the
-    decision a plain CASE over ``on_time >= expected``.
-
-    Semantics equal StreamingMatchDecide's final decision set: the
-    per-key machine decides ALL_SHIPPED iff the on-time parcel count
-    reaches ``expected`` (kernel invariant above) and THRESHOLD at the
-    deadline timer otherwise; here the left-outer join materializes
-    exactly the on-time parcels per order (zero-parcel orders surface
-    as one null-padded row), and the window close at
-    watermark-past-deadline plays the timer's role.  Decisions emit
-    ONLY when the aggregate window closes.  Everything runs as JVM hash
-    joins/aggs; it measured ~5x the keyed-Python-state lowering at
-    sf1.0 while that lowering ran one state group per order (SCALE.md
-    r10).  With state grouped per hash bucket the keyed lowering is
-    the faster of the two at sf0.01 and sf0.1 (SCALE.md, 2026-10-17
-    follow-up).
-
-    Two operational constraints, both inherent to the chained plan:
-
-      - ``span_lb_s`` bounds how far BEFORE its order a parcel may
-        arrive in event time (the join's state-retention lower bound);
-        the tick/watermark that closes the drain must clear
-        ``watermark_delay + span_lb_s`` past the last window end,
-        because a stream-stream join delays its OUTPUT watermark by
-        the maximum state-retention interval.
-      - do NOT filter synthetic keys (ticks) between the aggregation
-        and the sink: Catalyst pushes the filter below the watermark
-        operator, the tick row vanishes before it advances the
-        watermark, and no window ever closes (r10 bisect) — filter
-        after the sink instead.
-
-    Output: ``(order_id, decision)`` append rows, tick keys included
-    (filter ``order_id >= 0`` post-sink).
-    """
-
-    def __init__(
-        self,
-        input: str,
-        output: str,
-        *,
-        key: str,
-        type_col: str = "type",
-        order_type: str = "ORDER_CREATED",
-        parcel_type: str = "PARCEL_SHIPPED",
-        tick_type: str = "TICK",
-        expected_col: str = "expected",
-        ts_col: str = "ts",
-        timeout_s: float,
-        span_lb_s: float,
-        window: str = "1 day",
-        watermark_delay: str | None = None,
-        label: str | None = None,
-    ):
-        self.input = input
-        self.output = output
-        self.key = key
-        self.type_col = type_col
-        self.order_type = order_type
-        self.parcel_type = parcel_type
-        self.tick_type = tick_type
-        self.expected_col = expected_col
-        self.ts_col = ts_col
-        self.timeout_s = timeout_s
-        self.span_lb_s = span_lb_s
-        self.window = window
-        self.watermark_delay = watermark_delay
-        self.label = label
-
-    def transform_df(self, df: DataFrame, watermark_delay: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        t = self.type_col
-        # ticks ride BOTH branches so each side's watermark advances
-        orders = (
-            df.filter(
-                (F.col(t) == self.order_type) | (F.col(t) == self.tick_type)
-            )
-            .select(
-                F.col(self.key).alias("order_id"),
-                F.col(self.expected_col).alias("expected"),
-                F.col(self.ts_col).alias("__ots"),
-            )
-            .withWatermark("__ots", watermark_delay)
-        )
-        parcels = (
-            df.filter(
-                (F.col(t) == self.parcel_type) | (F.col(t) == self.tick_type)
-            )
-            .select(
-                F.col(self.key).alias("__pkey"),
-                F.col(self.ts_col).alias("__pts"),
-            )
-            .withWatermark("__pts", watermark_delay)
-        )
-        lb = int(self.span_lb_s)
-        ub = int(self.timeout_s)
-        joined = orders.join(
-            parcels,
-            F.expr(
-                f"order_id = __pkey AND __pts >= __ots - INTERVAL {lb} SECONDS "
-                f"AND __pts <= __ots + INTERVAL {ub} SECONDS"
-            ),
-            "leftOuter",
-        )
-        return (
-            joined.groupBy(
-                "order_id", F.window("__ots", self.window), "expected"
-            )
-            .agg(F.count("__pkey").alias("__on_time"))
-            .select(
-                "order_id",
-                F.when(
-                    F.col("__on_time") >= F.col("expected"), F.lit(ALL_SHIPPED)
-                )
-                .otherwise(F.lit(THRESHOLD))
-                .alias("decision"),
-            )
-        )
-
-    def transform(self, flow: Flow) -> Flow:
-        # the watermark delay bounds how late an event may arrive and
-        # still count toward a decision — there is NO safe default
-        # (a silent "1 second" would drop any real-world late event
-        # and break the documented decision-set equality with the
-        # keyed state machine), so the Flow path requires it explicitly
-        if self.watermark_delay is None:
-            raise ValueError(
-                "StreamingMatchDecideRelational: pass watermark_delay= "
-                "to the constructor (how late events may arrive), or "
-                "call transform_df(df, watermark_delay) directly"
-            )
-        return flow.without(self.input).with_stream(
-            self.output, self.transform_df(flow[self.input], self.watermark_delay)
-        )
 
     def input_names(self) -> Sequence[str]:
         return (self.input,)

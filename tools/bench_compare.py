@@ -21,8 +21,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 #: sweeps would re-drain the stream).  Their warm-run timings measure
 #: a dict lookup, so a warm-min comparison can neither detect a
 #: regression nor a win there: exclude them and report cold-only.
-EAGER_CACHED = {"cep_order_fulfillment_stream",
-                "cep_order_fulfillment_stream_relational"}
+EAGER_CACHED = {"cep_order_fulfillment_stream"}
 
 
 def _harvest(best: dict[str, tuple[float, str]], qs, src: str) -> None:
