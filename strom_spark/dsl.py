@@ -1,6 +1,6 @@
 """DSL: thin builder functions mirroring the reference's macros
-(``lib/dsl.ex:7-41`` — source/sink/mix/split/transform/rename) so a
-pipeline reads like the reference's examples:
+(``lib/dsl.ex:7-41`` — source/sink/mix/split/transform/rename), plus
+``pipeline``, so a pipeline reads like the reference's examples:
 
     from strom_spark.dsl import source, transform, split, mix, pipeline
 
@@ -20,7 +20,7 @@ from .component import Component, Pipeline
 from .operators.mixer import Mixer
 from .operators.renamer import Renamer
 from .operators.splitter import Splitter
-from .operators.transformer import Filter, FlatMap, Transformer
+from .operators.transformer import Transformer
 from .sources.sink import Sink
 from .sources.source import Source
 
@@ -35,14 +35,6 @@ def sink(name, origin, sync: bool = False, **kw) -> Sink:
 
 def transform(name_or_names, select=None, **columns) -> Transformer:
     return Transformer(name_or_names, select, **columns)
-
-
-def filter_(name_or_names, predicate, **kw) -> Filter:
-    return Filter(name_or_names, predicate, **kw)
-
-
-def flat_map(name_or_names, array_expr, **kw) -> FlatMap:
-    return FlatMap(name_or_names, array_expr, **kw)
 
 
 def mix(inputs, output, **kw) -> Mixer:
@@ -60,89 +52,3 @@ def rename(renames, **kw) -> Renamer:
 def pipeline(*components: Component, name: str | None = None) -> Pipeline:
     return Pipeline(components, name)
 
-
-# -- beyond-reference builders (joins, sampling, dedup) --------------------
-
-
-def join(left, right, output, on, **kw):
-    from .operators.transformer import Join
-
-    return Join(left, right, output, on, **kw)
-
-
-def asof(left, right, output, **kw):
-    from .operators.asof import AsofJoin
-
-    return AsofJoin(left, right, output, **kw)
-
-
-def agg(input, output=None, **kw):
-    from .operators.transformer import Agg
-
-    return Agg(input, output, **kw)
-
-
-def sample(input, output=None, **kw):
-    from .operators.sampling import HashSample
-
-    return HashSample(input, output, **kw)
-
-
-def split_hash(input, output=None, **kw):
-    from .operators.sampling import HashSplit
-
-    return HashSplit(input, output, **kw)
-
-
-def cap(input, output=None, **kw):
-    from .operators.sampling import GroupCap
-
-    return GroupCap(input, output, **kw)
-
-
-def dedup(input, output=None, **kw):
-    from .operators.dedup import ExactDedup
-
-    return ExactDedup(input, output, **kw)
-
-
-def winnow(input, output=None, **kw):
-    from .operators.dedup import WinnowFingerprints
-
-    return WinnowFingerprints(input, output, **kw)
-
-
-def range_join(left, right, output, **kw):
-    from .operators.rangejoin import RangeJoin
-
-    return RangeJoin(left, right, output, **kw)
-
-
-def bm25(input, output, **kw):
-    from .operators.textrank import BM25Score
-
-    return BM25Score(input, output, **kw)
-
-
-def tfidf(input, output, **kw):
-    from .operators.textrank import TfIdfTopTerms
-
-    return TfIdfTopTerms(input, output, **kw)
-
-
-def lm_score(input, output=None, **kw):
-    from .operators.textrank import UnigramLMScore
-
-    return UnigramLMScore(input, output, **kw)
-
-
-def components(input, output=None, **kw):
-    from .operators.graph import ConnectedComponents
-
-    return ConnectedComponents(input, output, **kw)
-
-
-def quantiles(input, output=None, **kw):
-    from .operators.relational import Quantiles
-
-    return Quantiles(input, output, **kw)

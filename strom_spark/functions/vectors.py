@@ -21,8 +21,7 @@ def dot(a: "Column | str", b: "Column | str") -> Column:
     null-pads ragged pairs, so a length mismatch yields null.
 
     HOF lambdas run interpreted, outside whole-stage codegen; the hot
-    paths avoid that cost either by unrolling against a literal
-    (:func:`dot_literal`) or by vectorizing a broadcast tile in Arrow
+    paths avoid that cost by vectorizing a broadcast tile in Arrow
     (``CosineTopK._scan_arrow``)."""
     return F.aggregate(
         F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
@@ -63,42 +62,6 @@ def const_long_array(values) -> Column:
     (see :func:`const_double_array` — same driver-side py4j argument;
     integer text round-trips exactly by construction)."""
     return F.expr("array(" + ",".join(f"{int(x)}L" for x in values) + ")")
-
-
-def dot_literal(a: "Column | str", values) -> Column:
-    """Left-fold dot of a vector column against a PYTHON-side constant
-    vector (pivot/centroid), unrolled into a codegen'd chain whose
-    length is the literal's own length.
-    Bit-identical to ``dot(a, F.array(*map(F.lit, values)))``: same
-    left association, same per-element double products (a float literal
-    element and ``F.lit(float)`` are the same double), with the ragged
-    guard falling back to the HOF form against the literal array."""
-    ca = _c(a)
-    vals = [float(x) for x in values]
-    lit_arr = F.array(*[F.lit(x) for x in vals])
-    acc: Column = F.lit(0.0)
-    for i, x in enumerate(vals):
-        acc = acc + F.get(ca, i).cast("double") * F.lit(x)
-    return F.when(F.size(ca) == len(vals), acc).otherwise(dot(ca, lit_arr))
-
-
-def sq_dist_literal(a: "Column | str", values) -> Column:
-    """Left-fold squared L2 distance of a vector column to a constant
-    centroid, unrolled into a codegen chain (see :func:`dot_literal`;
-    same bit-exactness argument — ``(a-b)*(a-b)`` terms, same left
-    association, ragged rows fall back to the ``zip_with`` fold)."""
-    ca = _c(a)
-    vals = [float(x) for x in values]
-    acc: Column = F.lit(0.0)
-    for i, x in enumerate(vals):
-        d = F.get(ca, i).cast("double") - F.lit(x)
-        acc = acc + d * d
-    hof = F.aggregate(
-        F.zip_with(ca, F.lit(vals), lambda p, q: (p - q) * (p - q)),
-        F.lit(0.0),
-        lambda acc2, x2: acc2 + x2,
-    )
-    return F.when(F.size(ca) == len(vals), acc).otherwise(hof)
 
 
 def cosine(a: "Column | str", b: "Column | str") -> Column:

@@ -46,6 +46,7 @@ from ..functions import text as TXT
 from ..functions import vectors as V
 from ..io import spread as _spread
 from ..planprobe import probe_loop_plan
+from .similarity import spherical_kmeans
 
 
 class ExactDedup(Component):
@@ -918,11 +919,6 @@ class SimHashPairs(Component):
         return (self.output,)
 
 
-#: SimHashDedup edge-table size from which each round join reads its own
-#: copy of the edges, persisted and partitioned on that join's key
-_PARTITION_PERSIST_MIN_ROWS = 5_000_000
-
-
 class SimHashDedup(Component):
     """Cluster-level near-dup dedup: one (id, keep_id) row per doc,
     keep_id = min id of the doc's connected component in the
@@ -973,41 +969,25 @@ class SimHashDedup(Component):
         keys = H.block_keys(F.col("sig"), self.max_distance, bits)
         edges = sig.select("id", F.explode(F.array(*keys)).alias("bk"))
         probe_loop_plan("SimHashDedup/setup", edges)
-        # the doc→block edge table is STATIC and each round joins it
-        # TWICE on different keys (labels on id, bucket minima on bk).
-        # Above `_PARTITION_PERSIST_MIN_ROWS` keep one persisted copy
-        # PARTITIONED PER JOIN KEY so neither round join re-shuffles
-        # the edge table (the PageRank static-adjacency discipline,
-        # round 8; a localCheckpoint reports unknown partitioning and
-        # re-exchanged the edges every round).  Below the bound the
-        # edge table is broadcast-sized anyway — AQE broadcasts it in
-        # the round joins and the two persist materializations are
-        # pure setup overhead (measured +1.6 s on the 25k-edge sf0.1
-        # corpus), so the plain checkpointed table serves both roles.
-        # The checkpoint FIRST either way: the upstream simhash
-        # signature pipeline is the expensive part, and independent
-        # persists would each recompute it at materialization
-        # (measured 2.3× on dedup_simhash_clusters at sf0.1);
-        # repartitioning the checkpointed RDD pays one slim shuffle
-        # per copy instead.
+        # the doc→block edge table is static and each round joins it
+        # twice (labels on id, bucket minima on bk).  Checkpoint it once
+        # so no round re-runs the upstream simhash signature pipeline;
+        # the one copy serves both joins (a persisted copy partitioned
+        # per join key measured slower up to 250k edges at sf1.0; see
+        # the SimHashDedup A/B in SCALE.md).
         edges = _cut(edges)
-        if edges.count() >= _PARTITION_PERSIST_MIN_ROWS:
-            edges_by_id = _pin(edges.repartition("id"))
-            edges_by_bk = _pin(edges.repartition("bk"))
-        else:
-            edges_by_id = edges_by_bk = edges
         labels = (
-            edges_by_id.select("id").distinct().select("id", F.col("id").alias("lab"))
+            edges.select("id").distinct().select("id", F.col("id").alias("lab"))
         )
         # labels only ever decrease, so sum(lab) is a monotone potential:
         # unchanged sum == fixpoint.  One tiny agg per round instead of a
         # join+count change detector.
         prev_sum = None
         for _ in range(self.max_iterations):
-            bmin = edges_by_id.join(labels, "id").groupBy("bk").agg(
+            bmin = edges.join(labels, "id").groupBy("bk").agg(
                 F.min("lab").alias("bmin")
             )
-            doc_min = edges_by_bk.join(bmin, "bk").groupBy("id").agg(
+            doc_min = edges.join(bmin, "bk").groupBy("id").agg(
                 F.min("bmin").alias("nlab")
             )
             labels = labels.join(doc_min, "id", "left").select(
@@ -1033,10 +1013,11 @@ class EmbeddingNearDupPairs(Component):
     """Cosine near-duplicate pairs over an embedding column — exact
     all-pairs via blocked matrix multiply.
 
-    Strategy ``gemm`` (default): one side is collected+broadcast as a
-    normalized float64 matrix; ``mapInPandas`` streams corpus blocks and
-    computes block × matrixᵀ with numpy GEMM — vectorized, no pair
-    materialization, linear scan of the corpus.
+    One side is collected+broadcast as a normalized float64 matrix;
+    ``mapInPandas`` streams corpus blocks and computes block × matrixᵀ
+    with numpy GEMM — vectorized, no pair materialization, linear scan
+    of the corpus.  Batch-only: the guard count and the collect need
+    the whole corpus at build time.
 
     The broadcast side is GUARDED: a cheap count first, and above
     ``max_broadcast_rows`` the broadcast side is hash-TILED — each tile
@@ -1055,11 +1036,6 @@ class EmbeddingNearDupPairs(Component):
     replayable in portable mode) or ``SemDeDup`` (cluster-blocked)
     above the bound.  Pass ``on_overflow='tile'`` explicitly to accept
     the quadratic cost (recall-measurement runs, bounded backfills).
-
-    Strategy ``join``: pure-plan self-join with JVM fold dot product —
-    no driver collection, but interpreted HOFs make it ~10× slower per
-    pair; useful when the input is a lazy/streaming plan that must not
-    be collected at build time.
     """
 
     def __init__(
@@ -1070,13 +1046,10 @@ class EmbeddingNearDupPairs(Component):
         id_col: str = "vec_id",
         vec_col: str = "embedding",
         threshold: float = 0.95,
-        strategy: str = "gemm",
         max_broadcast_rows: int = 2_000_000,
         on_overflow: str = "error",
         label: str | None = None,
     ):
-        if strategy not in ("gemm", "join"):
-            raise ValueError("strategy must be 'gemm' or 'join'")
         if on_overflow not in ("tile", "error"):
             raise ValueError("on_overflow must be 'tile' or 'error'")
         self.input = input
@@ -1084,7 +1057,6 @@ class EmbeddingNearDupPairs(Component):
         self.id_col = id_col
         self.vec_col = vec_col
         self.threshold = threshold
-        self.strategy = strategy
         self.max_broadcast_rows = max_broadcast_rows
         self.on_overflow = on_overflow
         self.label = label
@@ -1140,7 +1112,7 @@ class EmbeddingNearDupPairs(Component):
             return self._gemm_one(slim, slim)
         if self.on_overflow == "error":
             raise ValueError(
-                f"EmbeddingNearDupPairs gemm: corpus has {n} vectors > "
+                f"EmbeddingNearDupPairs: corpus has {n} vectors > "
                 f"max_broadcast_rows={self.max_broadcast_rows}; use "
                 "on_overflow='tile' or the sub-quadratic CosineLSHJoin"
             )
@@ -1160,25 +1132,16 @@ class EmbeddingNearDupPairs(Component):
         ]
         return reduce(lambda a, b: a.unionAll(b), parts)
 
-    def _join(self, df: DataFrame) -> DataFrame:
-        normed = V.l2_normalize_select(
-            df.select(F.col(self.id_col).alias("id"),
-                      F.col(self.vec_col).alias("__rv")),
-            "id", "__rv", "v",
-        )
-        a, b = normed.alias("a"), normed.alias("b")
-        return (
-            a.join(b, F.col("a.id") < F.col("b.id"))
-            .withColumn(
-                "cosine", F.round(V.dot(F.col("a.v"), F.col("b.v")), 6)
-            )
-            .filter(F.col("cosine") >= self.threshold)
-            .select(F.col("a.id").alias("d1"), F.col("b.id").alias("d2"), "cosine")
-        )
-
     def transform(self, flow: Flow) -> Flow:
+        from ..component import require_batch
+
         df = flow[self.input]
-        out = self._gemm(df) if self.strategy == "gemm" else self._join(df)
+        require_batch(
+            df,
+            "EmbeddingNearDupPairs",
+            "the guard count and the broadcast collect need the whole corpus",
+        )
+        out = self._gemm(df)
         return flow.without(self.input).with_stream(self.output, out)
 
     def input_names(self) -> Sequence[str]:
@@ -2003,9 +1966,9 @@ class SemDeDup(Component):
 
     Centroid strategies:
 
-      - ``'kmeans'`` (production): Lloyd training on a bounded
-        deterministic sample (the ``IVFTopK`` pattern,
-        similarity.py:186), assignment via one broadcast-GEMM
+      - ``'kmeans'`` (production): spherical Lloyd training on a
+        bounded deterministic sample (``similarity.spherical_kmeans``,
+        shared with the IVF family), assignment via one broadcast-GEMM
         ``mapInPandas`` scan — linear, embarrassingly parallel.
       - ``'pivot'`` (deterministic / oracle-parity): the ``n_clusters``
         lowest-id vectors ARE the centroids and assignment is a
@@ -2123,8 +2086,9 @@ class SemDeDup(Component):
         )
 
     def _assign_kmeans(self, slim: DataFrame, k: int) -> DataFrame:
-        """Bounded-sample Lloyd training driver-side, then one linear
-        broadcast-GEMM assignment scan (the IVFTopK pattern)."""
+        """Bounded-sample Lloyd training driver-side (the IVF family's
+        ``spherical_kmeans``), then one linear broadcast-GEMM
+        assignment scan."""
         import numpy as np
 
         # sample in xxhash64(id) order, NOT id order: still fully
@@ -2139,18 +2103,7 @@ class SemDeDup(Component):
         )
         if sample.empty:
             raise ValueError("SemDeDup: input has no vectors")
-        X = np.stack(sample["v"].to_list()).astype("float64")
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-        rng = np.random.default_rng(self.seed)
-        k = min(k, len(X))
-        C = X[rng.choice(len(X), size=k, replace=False)]
-        for _ in range(self.iters):
-            assign = np.argmax(X @ C.T, axis=1)
-            for j in range(k):
-                members = X[assign == j]
-                if len(members):
-                    c = members.mean(axis=0)
-                    C[j] = c / max(float(np.linalg.norm(c)), 1e-30)
+        C = spherical_kmeans(sample["v"], k, self.iters, self.seed)
         bc = slim.sparkSession.sparkContext.broadcast(C)
 
         def assign_batches(batches):

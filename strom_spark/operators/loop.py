@@ -76,8 +76,8 @@ class Iterate(Component):
             pred = _resolve_expr(self.exit_when, looping)
             done_parts.append(looping.filter(pred))
             looping = looping.filter(~pred)
-            # count() is the loop condition — unavoidable action, one
-            # lightweight job per round (AQE-coalesced).
+            # isEmpty() is the loop condition — unavoidable action, one
+            # lightweight job per round (it stops at the first row).
             if looping.isEmpty():
                 break
             looping = self.body(looping)

@@ -407,92 +407,23 @@ class IVFTopK(Component):
         resolved from one corpus count: k = max(4, round(sqrt(N))),
         n_probe = ceil(k/4) — or n_probe = k (exact search) when the
         corpus is below ``min_ivf_n`` rows, where IVF cannot win
-        (r11 small-N guard).  Shared by IVFTopK and IVFIndex."""
-        k = self.n_centroids
-        n_probe = getattr(self, "n_probe", None)
-        if k is None:
-            n = corpus.count()
-            k = max(4, int(round(n**0.5)))
-            if n_probe is None and n < getattr(self, "min_ivf_n", 1024):
-                n_probe = k
+        (r11 small-N guard)."""
+        k, n = _n_lists(corpus, self.n_centroids)
+        n_probe = self.n_probe
         if n_probe is None:
-            n_probe = -(-k // 4)  # ceil
+            n_probe = k if n is not None and n < self.min_ivf_n else -(-k // 4)
         return k, min(n_probe, k)
 
-    def _train(self, corpus: DataFrame, n_centroids: int) -> np.ndarray:
-        # r15: memoized per (corpus DataFrame OBJECT, params) — NOT
-        # per data/path.  ivf_index_search builds IVFIndex and the
-        # in-memory IVFTopK off the SAME corpus frame in one query
-        # build; both trained identically (seeded) and each paid the
-        # TakeOrdered+toPandas sample job.  A WeakKeyDictionary on the
-        # frame object scopes the memo to one build: every bench run
-        # constructs a fresh DataFrame, so nothing survives across
-        # runs (the intra-execution-reuse discipline, same as persist).
-        key = (n_centroids, self.sample_size, self.iters, self.seed,
-               self.id_col, self.vec_col)
-        per_df = _TRAIN_MEMO.setdefault(corpus, {})
-        hit = per_df.get(key)
-        if hit is not None:
-            return hit
-        sample = (
-            corpus.select(F.col(self.id_col).alias("id"), F.col(self.vec_col).alias("v"))
-            .orderBy("id")
-            .limit(self.sample_size)
-            .toPandas()
-        )
-        X = np.stack(sample["v"].to_list()).astype("float64")
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-        rng = np.random.default_rng(self.seed)
-        k = min(n_centroids, len(X))
-        C = X[rng.choice(len(X), size=k, replace=False)]
-        for _ in range(self.iters):
-            assign = np.argmax(X @ C.T, axis=1)
-            for j in range(k):
-                members = X[assign == j]
-                if len(members):
-                    c = members.mean(axis=0)
-                    C[j] = c / max(np.linalg.norm(c), 1e-30)
-        per_df[key] = C
-        return C
-
     def transform(self, flow: Flow) -> Flow:
-        import pandas as pd
-
         corpus = flow[self.input]
         n_centroids, n_probe = self._resolve(corpus)
-        C = self._train(corpus, n_centroids)
-        spark = corpus.sparkSession
-        bc = spark.sparkContext.broadcast(C)
-
-        slim = corpus.select(
-            F.col(self.id_col).alias("neighbor_id"),
-            F.col(self.vec_col).cast("array<double>").alias("v"),
+        C = _train_lists(
+            corpus, n_centroids, self.sample_size, self.iters, self.seed,
+            self.id_col, self.vec_col,
         )
-        nid_type = slim.schema["neighbor_id"].dataType.simpleString()
-
-        def assign(batches):
-            M = bc.value
-            for batch in batches:
-                if not len(batch):
-                    continue
-                B = np.stack(batch["v"].to_list()).astype("float64")
-                B /= np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-30)
-                cid = np.argmax(B @ M.T, axis=1)
-                # normalization is INTERNAL to centroid assignment; the
-                # RAW vector rides on so the exact rerank uses the same
-                # dot/(qn*nn) double sequence as CosineTopK/the oracle
-                yield pd.DataFrame(
-                    {
-                        "neighbor_id": batch["neighbor_id"],
-                        "centroid_id": cid.astype("int32"),
-                        "nv": list(batch["v"]),
-                    }
-                )
-
-        assigned = slim.mapInPandas(
-            assign,
-            schema=f"neighbor_id {nid_type}, centroid_id int, nv array<double>",
-        ).withColumn("nn", V.norm("nv"))
+        assigned = _assign_lists(corpus, C, self.id_col, self.vec_col).withColumn(
+            "nn", V.norm("nv")
+        )
 
         probe_df = _probe_assign(
             flow[self.queries], C, n_probe, self.id_col, self.vec_col
@@ -550,50 +481,13 @@ class IVFIndex(Component):
     def transform(self, flow: Flow) -> Flow:
         import json
 
-        import pandas as pd
-
         corpus = flow[self.input]
-        trainer = IVFTopK(
-            "c",
-            "q",
-            "o",
-            n_centroids=self.n_centroids,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            sample_size=self.sample_size,
-            iters=self.iters,
-            seed=self.seed,
+        n_centroids, _ = _n_lists(corpus, self.n_centroids)
+        C = _train_lists(
+            corpus, n_centroids, self.sample_size, self.iters, self.seed,
+            self.id_col, self.vec_col,
         )
-        n_centroids, _ = trainer._resolve(corpus)
-        C = trainer._train(corpus, n_centroids)
-        bc = corpus.sparkSession.sparkContext.broadcast(C)
-        slim = corpus.select(
-            F.col(self.id_col).alias("neighbor_id"),
-            F.col(self.vec_col).cast("array<double>").alias("v"),
-        )
-        nid_type = slim.schema["neighbor_id"].dataType.simpleString()
-
-        def assign(batches):
-            M = bc.value
-            for batch in batches:
-                if not len(batch):
-                    continue
-                B = np.stack(batch["v"].to_list()).astype("float64")
-                B /= np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-30)
-                # store the RAW vector: the search-time rerank computes
-                # dot/(qn*nn) JVM-side (CosineTopK's exact sequence)
-                yield pd.DataFrame(
-                    {
-                        "neighbor_id": batch["neighbor_id"],
-                        "centroid_id": np.argmax(B @ M.T, axis=1).astype("int32"),
-                        "nv": list(batch["v"]),
-                    }
-                )
-
-        assigned = slim.mapInPandas(
-            assign,
-            schema=f"neighbor_id {nid_type}, centroid_id int, nv array<double>",
-        )
+        assigned = _assign_lists(corpus, C, self.id_col, self.vec_col)
         # r15 (guide §6): repartition ON the write-partition key first.
         # A dynamic-partition write without it has every upstream task
         # write one file per centroid it holds — tasks × centroids tiny
@@ -615,6 +509,102 @@ class IVFIndex(Component):
 
     def output_names(self) -> Sequence[str]:
         return ()
+
+
+def _n_lists(corpus: DataFrame, n_centroids: int | None) -> tuple[int, int | None]:
+    """(k, N): the pinned list count, or k = max(4, round(sqrt(N)))
+    from one corpus count when ``n_centroids`` is None — the classical
+    IVF balance point.  N is None when k was pinned (no count ran)."""
+    if n_centroids is not None:
+        return n_centroids, None
+    n = corpus.count()
+    return max(4, int(round(n**0.5))), n
+
+
+def spherical_kmeans(vectors, k: int, iters: int, seed: int) -> np.ndarray:
+    """Spherical Lloyd k-means over a driver-side sample (a pandas
+    Series of vectors): rows are
+    L2-normalized, ``min(k, len)`` seeded random rows start the
+    centroids, then ``iters`` rounds of max-cosine assignment and
+    renormalized member means (an empty list keeps its centroid).
+    Shared by the IVF family and SemDeDup, which each choose their own
+    sample."""
+    X = np.stack(vectors.to_list()).astype("float64")
+    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+    rng = np.random.default_rng(seed)
+    k = min(k, len(X))
+    C = X[rng.choice(len(X), size=k, replace=False)]
+    for _ in range(iters):
+        assign = np.argmax(X @ C.T, axis=1)
+        for j in range(k):
+            members = X[assign == j]
+            if len(members):
+                c = members.mean(axis=0)
+                C[j] = c / max(np.linalg.norm(c), 1e-30)
+    return C
+
+
+def _train_lists(
+    corpus: DataFrame, n_centroids: int, sample_size: int, iters: int,
+    seed: int, id_col: str, vec_col: str,
+) -> np.ndarray:
+    """IVF centroids: spherical k-means over the ``sample_size``
+    lowest-id vectors, memoized in ``_TRAIN_MEMO`` per corpus frame
+    object (r15: ivf_index_search trains IVFIndex and the in-memory
+    IVFTopK off the same frame in one build, and each paid the
+    TakeOrdered+toPandas sample job)."""
+    key = (n_centroids, sample_size, iters, seed, id_col, vec_col)
+    per_df = _TRAIN_MEMO.setdefault(corpus, {})
+    hit = per_df.get(key)
+    if hit is not None:
+        return hit
+    sample = (
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        .orderBy("id")
+        .limit(sample_size)
+        .toPandas()
+    )
+    per_df[key] = spherical_kmeans(sample["v"], n_centroids, iters, seed)
+    return per_df[key]
+
+
+def _assign_lists(
+    corpus: DataFrame, C: np.ndarray, id_col: str, vec_col: str
+) -> DataFrame:
+    """The inverted lists: one linear ``mapInPandas`` scan assigns each
+    corpus vector to its max-cosine centroid (batch GEMM against the
+    broadcast centroid matrix).  Emits (neighbor_id, centroid_id, nv)
+    with the caller's id type and the RAW vector: normalization is
+    internal to assignment, so the exact rerank uses the same
+    dot/(qn*nn) double sequence as CosineTopK/the oracle."""
+    import pandas as pd
+
+    bc = corpus.sparkSession.sparkContext.broadcast(C)
+    slim = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+    )
+    nid_type = slim.schema["neighbor_id"].dataType.simpleString()
+
+    def assign(batches):
+        M = bc.value
+        for batch in batches:
+            if not len(batch):
+                continue
+            B = np.stack(batch["v"].to_list()).astype("float64")
+            B /= np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-30)
+            yield pd.DataFrame(
+                {
+                    "neighbor_id": batch["neighbor_id"],
+                    "centroid_id": np.argmax(B @ M.T, axis=1).astype("int32"),
+                    "nv": list(batch["v"]),
+                }
+            )
+
+    return slim.mapInPandas(
+        assign,
+        schema=f"neighbor_id {nid_type}, centroid_id int, nv array<double>",
+    )
 
 
 def _probe_assign(

@@ -164,30 +164,6 @@ def test_simhash_and_pairs(docs):
         assert r.hamming <= 3 and r.d1 < r.d2
 
 
-def test_simhash_dedup_partitioned_persist_path_identical(docs, monkeypatch):
-    """The >= _PARTITION_PERSIST_MIN_ROWS branch (two join-key-
-    partitioned persisted edge copies — the 100 TB shuffle-regime
-    path) must produce bit-identical clusters to the small-corpus
-    checkpoint-only branch AQE broadcast-serves."""
-    from strom_spark.operators import dedup
-    from strom_spark.operators.dedup import SimHashDedup
-
-    small = docs.limit(200)
-
-    def clusters():
-        return (
-            SimHashDedup("d", "o", max_distance=4)(Flow({"d": small}))["o"]
-            .toPandas()
-            .sort_values("id")
-            .reset_index(drop=True)
-        )
-
-    base = clusters()
-    monkeypatch.setattr(dedup, "_PARTITION_PERSIST_MIN_ROWS", 1)
-    forced = clusters()
-    assert base.equals(forced)
-
-
 def test_embedding_near_dup_and_lsh(emb):
     flow = Flow({"emb": emb})
     exact = EmbeddingNearDupPairs("emb", "p", threshold=0.3)(flow)["p"]
@@ -609,6 +585,13 @@ def test_embedding_gemm_tiling_matches_untiled(spark, emb):
         EmbeddingNearDupPairs(
             "e", "p", max_broadcast_rows=100, on_overflow="error"
         )(flow)["p"]
+    # batch-only contract: the guard count and the collect need the corpus
+    stream = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .selectExpr("value AS vec_id", "array(CAST(value AS DOUBLE)) AS embedding")
+    )
+    with pytest.raises(TypeError, match="EmbeddingNearDupPairs is batch-only"):
+        EmbeddingNearDupPairs("e", "p")(Flow({"e": stream}))
 
 
 def test_wav_decode_real_format(spark):

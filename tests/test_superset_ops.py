@@ -330,8 +330,9 @@ def test_rebatch_lines_invariants(spark, sf_dir):
 
 def test_ivf_index_probe_is_partition_pruned(spark, emb, tmp_path):
     """Persisted IVF index: the probe scan must open only the probed
-    centroid partitions (PartitionFilters in the plan) and agree with
-    the in-memory IVFTopK at the same config."""
+    centroid partitions (PartitionFilters in the plan), agree with
+    exact search when it probes every list, and agree with the
+    in-memory IVFTopK at the same pruned config."""
     import contextlib
     import io
 
@@ -353,6 +354,14 @@ def test_ivf_index_probe_is_partition_pruned(spark, emb, tmp_path):
     plan = buf.getvalue()
     assert "PartitionFilters" in plan and "centroid_id" in plan
     assert pruned.count() == 50
+    # the index and the in-memory operator build the same lists
+    cols = ["query_id", "neighbor_id", "cosine", "rank"]
+    inmem = IVFTopK("corpus", "queries", "knn", k=5, n_centroids=8, n_probe=2)(
+        Flow({"corpus": emb, "queries": queries})
+    )["knn"]
+    assert sorted(map(tuple, pruned.select(*cols).collect())) == sorted(
+        map(tuple, inmem.select(*cols).collect())
+    )
 
 
 def test_ivf_string_ids_end_to_end(spark, emb, tmp_path):

@@ -393,18 +393,20 @@ def test_draw_rail_yard_rendering(spark):
     )
 
 
-def test_dsl_beyond_reference_builders(spark, sf_dir):
-    """The dsl covers the beyond-reference operators too — a curation
-    pipeline reads like the reference's macro examples."""
+def test_curation_pipeline_caps_splits_samples_and_dedups(spark, sf_dir):
+    """A curation pipeline built from the sampling and dedup classes:
+    a hash split then a per-source cap compose in one Pipeline, and
+    HashSample / ExactDedup shrink the corpus."""
     from pyspark.sql import functions as F
 
-    from strom_spark import Flow
-    from strom_spark.dsl import cap, dedup, pipeline, sample, split_hash
+    from strom_spark import ExactDedup, Flow, GroupCap, HashSample, HashSplit, Pipeline
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = pipeline(
-        split_hash("docs", key_col="doc_id", splits={"train": 0.9, "test": 0.1}),
-        cap("docs", by="source", key_col="doc_id", n=5),
+    p = Pipeline(
+        [
+            HashSplit("docs", key_col="doc_id", splits={"train": 0.9, "test": 0.1}),
+            GroupCap("docs", by="source", key_col="doc_id", n=5),
+        ],
         name="curation",
     )
     out = p(Flow({"docs": docs}))["docs"]
@@ -412,7 +414,7 @@ def test_dsl_beyond_reference_builders(spark, sf_dir):
     assert all(r.n <= 5 for r in rows)
     assert {r.split for r in rows} <= {"train", "test"}
 
-    s = sample("docs", key_col="doc_id", fraction=0.5)(Flow({"docs": docs}))["docs"]
+    s = HashSample("docs", key_col="doc_id", fraction=0.5)(Flow({"docs": docs}))["docs"]
     assert 0 < s.count() < docs.count()
-    d = dedup("docs", "kept", keep="rows")(Flow({"docs": docs}))["kept"]
+    d = ExactDedup("docs", "kept", keep="rows")(Flow({"docs": docs}))["kept"]
     assert d.count() <= docs.count()
